@@ -180,9 +180,7 @@ def export_formats_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from doctr_spark.operators.pipeline import extract_pages
 
     t = transcripts_from_documents(spark, sf_dir)
-    # fused page-level pipeline (round 7): one Arrow stage to built pages
-    # instead of the staged decode/detect/recognize/groupBy chain —
-    # identical rows (tests/test_fused_pipeline.py parity)
+    # page-sink extraction kernel: one Arrow stage to built pages
     built = extract_pages(t).persist()
     built.count()  # eager: all four export branches share this one pass
     outs = []
@@ -348,7 +346,7 @@ def metric_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     phantom GT cell with no rulings, so the staged expectation is ANALYTIC
     — recall = cells/(cells+phantom), precision = structure accuracy = 1."""
     from doctr_spark.fixtures.tables import generate_table_metric_transcripts
-    from doctr_spark.operators.detect import detect_and_crop
+    from doctr_spark.operators.detect import detect_boxes
     from doctr_spark.operators.metrics import table_cells_per_page
 
     tdf, gdf = generate_table_metric_transcripts(spark, 30, with_gt=True)
@@ -369,9 +367,9 @@ def metric_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "array<struct<cells: array<struct<geometry: array<double>, row_start: int, "
         "row_end: int, col_start: int, col_end: int>>, num_rows: int, num_cols: int>>"
     )
-    crops = detect_and_crop(decode_pages(tdf))
+    boxes = detect_boxes(decode_pages(tdf))
     preds = (
-        crops.where(F.col("word_idx") == -2)
+        boxes.where(F.col("word_idx") == -2)
         .select("conv_id", "turn_idx", F.from_json("aux", tables_schema).alias("t"))
         .select(
             "conv_id",
@@ -675,7 +673,7 @@ def metric_localization(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ANALYTIC — recall = detectable/total, precision = 1, meanIoU = 1 —
     not a replay of the pipeline's own output."""
     from doctr_spark.fixtures.boxes import generate_boxed_transcripts
-    from doctr_spark.operators.detect import detect_and_crop
+    from doctr_spark.operators.detect import detect_boxes
     from doctr_spark.operators.metrics import localization_per_page
 
     tdf, gdf = generate_boxed_transcripts(spark, 30, with_gt=True)
@@ -689,9 +687,9 @@ def metric_localization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1.0).alias("mean_iou"),
     )
     _stage_expectation(exp, "loc_gt")
-    crops = detect_and_crop(decode_pages(tdf))
+    boxes = detect_boxes(decode_pages(tdf))
     preds = (
-        crops.where(F.col("word_idx") >= 0)
+        boxes.where(F.col("word_idx") >= 0)
         .groupBy("conv_id", "turn_idx")
         .agg(F.collect_list(F.array("xmin", "ymin", "xmax", "ymax")).alias("pred_boxes"))
     )

@@ -241,8 +241,8 @@ def build_page(
             # direction inferred from the recognized text. Segments become
             # the page's blocks, the way the reference exporters emit one
             # paragraph per segment (io/exporters.py:114-216). When the
-            # layout predictor's regions are supplied (the pipeline's
-            # carry_layout sentinel), each line takes the label of the
+            # layout predictor's regions are supplied (the page processor's
+            # carry_layout output), each line takes the label of the
             # region covering >= 50% of it and the sort becomes role-aware:
             # headers first, footnotes + footers last, captions spliced next
             # to their float (reading_order/base.py:283-315, 382-460).

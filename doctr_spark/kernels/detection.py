@@ -62,6 +62,23 @@ def detect_words(
     return boxes, rel, scores
 
 
+def snap_boxes(
+    rel_boxes: np.ndarray, page_shape: tuple[int, int]
+) -> tuple[np.ndarray, np.ndarray]:
+    """Relative (N, 4) boxes -> (abs_boxes, rel_boxes) on the page's pixel
+    grid: rounded, clipped to the page with at least one pixel per side,
+    and the relative boxes re-derived from those pixels so every consumer
+    sees the `detect_words` geometry contract (rel == abs / (W, H, W, H))."""
+    h, w = page_shape
+    scale = np.array([w, h, w, h], dtype=np.float64)
+    abs_boxes = np.rint(np.asarray(rel_boxes, dtype=np.float64) * scale).astype(np.int64)
+    abs_boxes[:, 0] = np.clip(abs_boxes[:, 0], 0, w - 1)
+    abs_boxes[:, 1] = np.clip(abs_boxes[:, 1], 0, h - 1)
+    abs_boxes[:, 2] = np.clip(abs_boxes[:, 2], abs_boxes[:, 0] + 1, w)
+    abs_boxes[:, 3] = np.clip(abs_boxes[:, 3], abs_boxes[:, 1] + 1, h)
+    return abs_boxes, abs_boxes.astype(np.float64) / scale
+
+
 def mask_regions(page: np.ndarray, rel_boxes: np.ndarray) -> np.ndarray:
     """Blank out page regions before detection (reference `mask_boxes` /
     ignore_regions, `doctr/models/_utils.py:221-258`,

@@ -1,29 +1,16 @@
-"""Stage 4 — document reconstruction: word rows -> nested pages -> documents.
+"""Document reconstruction: one page's recognized words -> built page.
 
-Per-page assembly is an `applyInPandas` over ``(conv_id, turn_idx,
-page_idx)`` running the DocumentBuilder kernel (sort -> lines -> blocks ->
-nested export + render). Document assembly — ordering pages and folding the
-page renders with the reference's "\\n\\n\\n\\n" page separator — is pure
-native Spark (`collect_list` + `array_sort` + `concat_ws`), so it stays in
-whole-stage codegen.
-
-Group sizes are bounded by words-per-page (a few hundred), so this groupBy
-cannot skew regardless of conversation length.
+The `DocumentBuilder` step (`doctr/models/builder.py`) for one page, run
+inside the extraction kernel (`operators.pipeline`); document assembly —
+pages in order, joined with the reference's "\\n\\n\\n\\n" page separator —
+is the kernel's document sink.
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: N812
-
-from ..kernels.builder import PAGE_BREAK, build_page
-
-PAGE_DOC_SCHEMA = (
-    "conv_id string, turn_idx int, page_idx int, n_words int, page_text string, page_json string"
-)
+from ..kernels.builder import build_page
 
 
 def build_page_record(
@@ -46,18 +33,18 @@ def build_page_record(
     include_furniture: bool = True,
 ) -> tuple[int, str, str]:
     """One page's build: parallel word arrays -> (n_words, page_text,
-    page_json). Shared by the staged `build_pages` stage and the fused
-    single-stage pipeline (`operators.pipeline`) so the builder semantics
-    (empty-word filter, table consumption, page export) exist once."""
+    page_json): empty-word filter, table consumption, then the
+    DocumentBuilder kernel's sort -> lines -> blocks -> nested export +
+    render. The document and page sinks of the extraction kernel
+    (`operators.pipeline`) call it per page."""
     import numpy as np
 
     from ..kernels.tables import build_tables
 
     # unreadable detections (photos/artefacts/noise recognize as empty)
     # carry no text and are dropped here, the builder-entry analogue of
-    # the reference's zero-size/garbage crop filtering
-    # (value is a string column: non-null non-empty strings survive, like
-    # the previous stage-level `fillna("") != ""` filter)
+    # the reference's zero-size/garbage crop filtering (only non-empty
+    # strings survive)
     keep_mask = np.asarray([isinstance(v, str) and v != "" for v in values], dtype=bool)
     if not keep_mask.all():
         boxes = boxes[keep_mask]
@@ -101,103 +88,3 @@ def build_page_record(
     text = page.pop("text")
     n_words = int(boxes.shape[0]) + int(consumed.sum())
     return n_words, text, json.dumps(page)
-
-
-def _make_builder(
-    resolve_lines: bool,
-    resolve_blocks: bool,
-    paragraph_break: float,
-    keep_reading_order: bool = False,
-    text_direction: str | None = None,
-    include_furniture: bool = True,
-):
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id = pdf["conv_id"].iloc[0]
-        turn_idx = int(pdf["turn_idx"].iloc[0])
-        page_idx = int(pdf["page_idx"].iloc[0])
-        dims = (int(pdf["page_h"].iloc[0]), int(pdf["page_w"].iloc[0]))
-        page_orientation = None
-        if "page_orient" in pdf.columns:
-            page_orientation = {
-                "value": int(pdf["page_orient"].iloc[0]),
-                "confidence": float(pdf["page_orient_conf"].iloc[0]),
-            }
-
-        raw_tables = []
-        layout_regions = None
-        if "aux" in pdf.columns:
-            for blob in pdf.loc[pdf["word_idx"] == -2, "aux"]:
-                if blob:
-                    raw_tables.extend(json.loads(blob))
-            for blob in pdf.loc[pdf["word_idx"] == -3, "aux"]:
-                if blob:
-                    layout_regions = json.loads(blob)
-        pdf = pdf[pdf["word_idx"] >= 0]
-        boxes = pdf[["xmin", "ymin", "xmax", "ymax"]].to_numpy()
-        values = pdf["value"].tolist()
-        confs = pdf["confidence"].tolist()
-        scores = pdf["score"].to_numpy()
-        orientations = None
-        if "crop_orient" in pdf.columns:
-            orientations = list(zip(pdf["crop_orient"].tolist(), pdf["crop_orient_conf"].tolist()))
-
-        n_words, text, page_json = build_page_record(
-            boxes, scores, values, confs, orientations, dims, page_idx,
-            raw_tables, layout_regions, page_orientation,
-            resolve_lines=resolve_lines,
-            resolve_blocks=resolve_blocks,
-            paragraph_break=paragraph_break,
-            keep_reading_order=keep_reading_order,
-            text_direction=text_direction,
-            include_furniture=include_furniture,
-        )
-        return pd.DataFrame(
-            [(conv_id, turn_idx, page_idx, n_words, text, page_json)],
-            columns=["conv_id", "turn_idx", "page_idx", "n_words", "page_text", "page_json"],
-        )
-
-    return fn
-
-
-def build_pages(
-    words: DataFrame,
-    resolve_lines: bool = True,
-    resolve_blocks: bool = False,
-    paragraph_break: float = 0.035,
-    keep_reading_order: bool = False,
-    text_direction: str | None = None,
-    include_furniture: bool = True,
-) -> DataFrame:
-    fn = _make_builder(
-        resolve_lines,
-        resolve_blocks,
-        paragraph_break,
-        keep_reading_order,
-        text_direction,
-        include_furniture,
-    )
-    return words.groupBy("conv_id", "turn_idx", "page_idx").applyInPandas(fn, PAGE_DOC_SCHEMA)
-
-
-def assemble_documents(pages: DataFrame) -> DataFrame:
-    """Page rows -> one row per turn with the reference page-join fold."""
-    return (
-        pages.groupBy("conv_id", "turn_idx")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("page_idx", "page_text", "page_json", "n_words"))
-            ).alias("_pages")
-        )
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.concat_ws(PAGE_BREAK, F.transform("_pages", lambda p: p["page_text"])).alias(
-                "extracted_text"
-            ),
-            F.size("_pages").alias("n_pages"),
-            F.aggregate(
-                F.transform("_pages", lambda p: p["n_words"]), F.lit(0), lambda a, b: a + b
-            ).alias("n_words"),
-            F.transform("_pages", lambda p: p["page_json"]).alias("pages_json"),
-        )
-    )

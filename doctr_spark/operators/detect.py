@@ -1,43 +1,33 @@
-"""Stage 2 — detection + crop explode: page rows -> word-crop rows.
+"""Detection: the per-page detection kernel and a box-only detect stage.
 
-Fuses the reference's detection forward/postprocess
-(`doctr/models/detection/...`) with crop extraction
-(`doctr/models/predictor/base.py:163-196`) in one `mapInPandas` stage so the
-page bytes are read exactly once and never shuffled again. Output rows are
-keyed ``(conv_id, turn_idx, page_idx, word_idx)`` — the keyed-join
-replacement for the reference's positional flatten/re-split bookkeeping
-(`predictor/base.py:217-233`).
-
-Pages with zero detections emit one sentinel row (word_idx = -1, null crop)
-so the builder stage still materializes the empty page without a second
-scan of the decode output.
+`make_page_processor` is the reference's detection forward/postprocess
+(`doctr/models/detection/...`) with its page-level companions (straighten,
+layout regions, ignore-region masking, table structure) as one per-page
+function; the extraction kernel (`operators.pipeline`) crops and recognizes
+its boxes. `detect_boxes` runs the same processor as a Spark stage over
+decoded page rows for the queries that read detections only (localization
+and table-cell metrics).
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..kernels.detection import detect_words, extract_crops
-from ..kernels.imgcodec import decode_page, encode_page
+from ..kernels.detection import detect_words
+from ..kernels.imgcodec import decode_page
 
-CROPS_SCHEMA = (
+BOXES_SCHEMA = (
     "conv_id string, turn_idx int, page_idx int, page_h int, page_w int, "
-    "page_orient int, page_orient_conf double, "
-    "word_idx int, xmin double, ymin double, xmax double, ymax double, "
-    "score double, crop binary, aux string"
+    "word_idx int, xmin double, ymin double, xmax double, ymax double, aux string"
 )
 _COLS = [
-    "conv_id", "turn_idx", "page_idx", "page_h", "page_w", "page_orient", "page_orient_conf",
-    "word_idx", "xmin", "ymin", "xmax", "ymax", "score", "crop", "aux",
+    "conv_id", "turn_idx", "page_idx", "page_h", "page_w",
+    "word_idx", "xmin", "ymin", "xmax", "ymax", "aux",
 ]  # fmt: skip
-
-# word_idx sentinels: -1 = empty page (no words, no tables); -2 = per-page
-# table-structure prediction carried in `aux` as JSON; -3 = per-page layout
-# regions (label + relative box) carried in `aux` as JSON for the
-# layout-aware reading-order builder
 
 
 def make_page_processor(
@@ -49,16 +39,17 @@ def make_page_processor(
     det_preserve_aspect_ratio: bool = True,
     det_symmetric_pad: bool = True,
 ):
-    """Per-page detection kernel shared by the staged `detect_and_crop`
-    stage and the fused single-stage pipeline (`operators.pipeline`):
-    straighten -> layout regions -> masking -> detect -> table structure,
-    with identical ordering and thresholds in both callers. Returns
+    """Per-page detection kernel shared by the extraction kernel
+    (`operators.pipeline`) and :func:`detect_boxes`: straighten -> layout
+    regions -> masking -> detect -> table structure. ``carry_layout`` runs
+    the layout predictor even without masking, for the layout-aware
+    reading-order builder (`reading_order/base.py:534-578`). Returns
     ``process_page(img) -> (img, orient, orient_conf, regions, tables,
     abs_boxes, rel_boxes, scores)`` where ``img`` is the (possibly
     straightened/masked) page the crops must be sliced from."""
     import numpy as np
 
-    from ..kernels.detection import DET_PRESETS, mask_regions
+    from ..kernels.detection import DET_PRESETS, mask_regions, snap_boxes
     from ..kernels.preprocessor import letterbox, unletterbox_boxes
     from ..kernels.rgeometry import (
         estimate_skew_angle,
@@ -85,15 +76,7 @@ def make_page_processor(
         )
         _, rel_lb, scores = detect_words(lb, bin_thresh=bin_thresh, box_thresh=box_thresh)
         rel = unletterbox_boxes(rel_lb, lb_meta, det_input_size)
-        h, w = img.shape[:2]
-        abs_boxes = np.rint(rel * np.array([w, h, w, h], dtype=np.float64)).astype(np.int64)
-        abs_boxes[:, 0] = np.clip(abs_boxes[:, 0], 0, w - 1)
-        abs_boxes[:, 1] = np.clip(abs_boxes[:, 1], 0, h - 1)
-        abs_boxes[:, 2] = np.clip(abs_boxes[:, 2], abs_boxes[:, 0] + 1, w)
-        abs_boxes[:, 3] = np.clip(abs_boxes[:, 3], abs_boxes[:, 1] + 1, h)
-        # recompute rel from the final abs pixels so the downstream builder
-        # sees the same geometry contract as the direct-detection path
-        rel = abs_boxes.astype(np.float64) / np.array([w, h, w, h], dtype=np.float64)
+        abs_boxes, rel = snap_boxes(rel, img.shape[:2])
         return abs_boxes, rel, scores
 
     def process_page(img: np.ndarray):
@@ -148,90 +131,27 @@ def make_page_processor(
     return process_page
 
 
-def _make_detector(
-    mask_region_labels: tuple[str, ...] | None,
-    straighten_pages: bool = False,
-    det_arch: str = "db_like",
-    carry_layout: bool = False,
-    det_input_size: tuple[int, int] | None = None,
-    det_preserve_aspect_ratio: bool = True,
-    det_symmetric_pad: bool = True,
-):
-    import json
+def detect_boxes(pages: DataFrame, mask_region_labels: tuple[str, ...] | None = None) -> DataFrame:
+    """Decoded page rows (`operators.decode.decode_pages`) -> detection rows:
+    one per word box (``word_idx >= 0``, page-relative ``xmin..ymax``) and,
+    on pages with ruled tables, one ``word_idx = -2`` row carrying the
+    table-structure prediction as JSON in ``aux``. ``mask_region_labels``
+    blanks those layout regions before detection."""
 
-    process_page = make_page_processor(
-        mask_region_labels, straighten_pages, det_arch, carry_layout,
-        det_input_size, det_preserve_aspect_ratio, det_symmetric_pad,
-    )
-
-    def _detect_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        process_page = make_page_processor(mask_region_labels)
         for pdf in batches:
             rows = []
-            for conv_id, turn_idx, page_idx, page_h, page_w, blob in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["page_idx"], pdf["page_h"], pdf["page_w"], pdf["page"]
+            for conv_id, turn_idx, page_idx, blob in zip(
+                pdf["conv_id"], pdf["turn_idx"], pdf["page_idx"], pdf["page"]
             ):
-                img = decode_page(bytes(blob))
-                img, orient, orient_conf, regions, tables, abs_boxes, rel_boxes, scores = (
-                    process_page(img)
-                )
-                key = (
-                    conv_id, int(turn_idx), int(page_idx),
-                    int(img.shape[0]), int(img.shape[1]), orient, float(orient_conf),
-                )  # fmt: skip
-                if carry_layout:
-                    rows.append(
-                        key
-                        + (-3, 0.0, 0.0, 0.0, 0.0, 0.0, None,
-                           json.dumps({"boxes": regions["boxes"].tolist(),
-                                       "class_names": regions["class_names"]}))
-                    )  # fmt: skip
+                img, _, _, _, tables, _, rel_boxes, _ = process_page(decode_page(bytes(blob)))
+                key = (conv_id, int(turn_idx), int(page_idx), int(img.shape[0]), int(img.shape[1]))
                 if tables:
-                    rows.append(key + (-2, 0.0, 0.0, 0.0, 0.0, 0.0, None, json.dumps(tables)))
-                if abs_boxes.shape[0] == 0:
-                    if not tables and not carry_layout:
-                        rows.append(key + (-1, 0.0, 0.0, 0.0, 0.0, 0.0, None, None))
-                    continue
-                crops = extract_crops(img, abs_boxes)
-                for w_idx, (rel, score, crop) in enumerate(zip(rel_boxes, scores, crops)):
-                    rows.append(
-                        key
-                        + (w_idx, float(rel[0]), float(rel[1]), float(rel[2]), float(rel[3]),
-                           float(score), encode_page(crop), None)
-                    )  # fmt: skip
+                    rows.append(key + (-2, 0.0, 0.0, 0.0, 0.0, json.dumps(tables)))
+                rows.extend(
+                    key + (i, *(float(v) for v in rel), None) for i, rel in enumerate(rel_boxes)
+                )
             yield pd.DataFrame(rows, columns=_COLS)
 
-    return _detect_batches
-
-
-def detect_and_crop(
-    pages: DataFrame,
-    mask_region_labels: tuple[str, ...] | None = None,
-    straighten_pages: bool = False,
-    det_arch: str = "db_like",
-    carry_layout: bool = False,
-    det_input_size: tuple[int, int] | None = None,
-    det_preserve_aspect_ratio: bool = True,
-    det_symmetric_pad: bool = True,
-) -> DataFrame:
-    """Detection + crop explode; ``mask_region_labels`` blanks matching
-    layout regions before detection (the ignore_regions option);
-    ``straighten_pages`` classifies + undoes right-angle page rotation
-    before detection (reference straighten loop,
-    `doctr/models/predictor/pytorch.py:110-142`); ``det_arch`` selects the
-    architecture's binarization/objectness threshold preset
-    (`kernels.detection.DET_PRESETS`); ``carry_layout`` runs the layout
-    predictor and ships its (label, box) regions to the builder in a
-    word_idx = -3 sentinel row — the Spark analogue of the reference
-    feeding LayoutPredictor output into reading order
-    (`doctr/models/predictor/base.py` + `reading_order/base.py:534-578`);
-    ``det_input_size`` routes every page through the PreProcessor
-    letterbox (aspect-preserving resize + symmetric pad,
-    `kernels.preprocessor`) before detection, with the detected geometry
-    mapped exactly back to page coordinates."""
-    return pages.mapInPandas(
-        _make_detector(
-            mask_region_labels, straighten_pages, det_arch, carry_layout,
-            det_input_size, det_preserve_aspect_ratio, det_symmetric_pad,
-        ),
-        schema=CROPS_SCHEMA,
-    )
+    return pages.mapInPandas(fn, schema=BOXES_SCHEMA)

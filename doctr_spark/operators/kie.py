@@ -1,138 +1,49 @@
-"""KIE extraction pipeline + export stage.
+"""KIE extraction + export stage.
 
-Shares the decode/detect/recognize stages with the OCR pipeline (the
-reference's KIEPredictor shares preprocess/detect/reco with OCRPredictor,
-`doctr/models/kie_predictor/pytorch.py:76-208`) and swaps the builder for
-the per-class KIE variant. Also hosts the multi-format export operator.
+KIE runs the OCR extraction kernel (`operators.pipeline`) unchanged — the
+reference's KIEPredictor shares preprocess/detect/reco with OCRPredictor
+(`doctr/models/kie_predictor/pytorch.py:76-208`) — and swaps only the sink
+for the per-class KIE builder. Also hosts the multi-format export operator.
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from ..kernels.exporters import EXPORTERS, PAGE_BREAKS
 from ..kernels.kie import kie_build_page, render_kie_page
-from .decode import decode_pages
-from .detect import detect_and_crop
-from .recognize import recognize
+from .pipeline import Sink, extract_rows
 
-KIE_PAGE_SCHEMA = (
+
+def _kie_rows(conv_id, turn_idx, pages, opts):
+    rows = []
+    for p in pages:
+        page = kie_build_page(
+            p.rel_boxes, p.scores, p.values, p.confs, p.dims, page_idx=p.page_idx
+        )
+        counts = {cls: len(preds) for cls, preds in page["predictions"].items()}
+        rows.append((
+            conv_id, turn_idx, p.page_idx,
+            render_kie_page(page), json.dumps(page["predictions"]), counts,
+        ))  # fmt: skip
+    return rows
+
+
+KIE_SINK = Sink(
     "conv_id string, turn_idx int, page_idx int, kie_text string, "
-    "predictions_json string, class_counts map<string, int>"
+    "predictions_json string, class_counts map<string, int>",
+    ("conv_id", "turn_idx", "page_idx", "kie_text", "predictions_json", "class_counts"),
+    _kie_rows,
 )
 
 
-def _kie_builder(pdf: pd.DataFrame) -> pd.DataFrame:
-    conv_id = pdf["conv_id"].iloc[0]
-    turn_idx = int(pdf["turn_idx"].iloc[0])
-    page_idx = int(pdf["page_idx"].iloc[0])
-    dims = (int(pdf["page_h"].iloc[0]), int(pdf["page_w"].iloc[0]))
-    pdf = pdf[pdf["word_idx"] >= 0]
-    page = kie_build_page(
-        pdf[["xmin", "ymin", "xmax", "ymax"]].to_numpy(),
-        pdf["score"].to_numpy(),
-        pdf["value"].tolist(),
-        pdf["confidence"].tolist(),
-        dims,
-        page_idx=page_idx,
-    )
-    counts = {cls: len(preds) for cls, preds in page["predictions"].items()}
-    return pd.DataFrame(
-        [
-            (
-                conv_id,
-                turn_idx,
-                page_idx,
-                render_kie_page(page),
-                json.dumps(page["predictions"]),
-                counts,
-            )
-        ],
-        columns=["conv_id", "turn_idx", "page_idx", "kie_text", "predictions_json", "class_counts"],
-    )
-
-
-def _make_fused_kie():
-    """The KIE pipeline's fused kernel (round-7): decode -> detect ->
-    recognize -> KIE-build inside one mapInPandas, exactly the
-    `operators.pipeline` fusion with the per-class builder swapped in.
-    Output rows are per PAGE (the KIE contract) — everything is still a
-    pure function of the turn's own input row, so no shuffle is needed
-    after the de-skew repartition. Bit-identical to the staged path
-    (shared kernels; parity-tested in tests/test_fused_pipeline.py)."""
-    import numpy as np
-
-    from ..fixtures.payloads import decode_payload
-    from ..kernels.detection import extract_crops
-    from .detect import make_page_processor
-    from .recognize import recognize_crop_arrays
-
-    _COLS = ["conv_id", "turn_idx", "page_idx", "kie_text", "predictions_json", "class_counts"]
-
-    def fn(batches):
-        process_page = make_page_processor(None)
-        for pdf in batches:
-            pages_meta, all_crops = [], []
-            for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                try:
-                    pages = decode_payload(text)
-                except NotImplementedError:
-                    raise
-                except Exception:
-                    continue
-                for page_idx, img in enumerate(pages):
-                    img, _o, _oc, _rg, _tb, abs_boxes, rel_boxes, scores = process_page(img)
-                    crops = extract_crops(img, abs_boxes)
-                    start = len(all_crops)
-                    all_crops.extend(np.ascontiguousarray(c) for c in crops)
-                    pages_meta.append((
-                        conv_id, int(turn_idx), page_idx,
-                        (int(img.shape[0]), int(img.shape[1])),
-                        rel_boxes, scores, start, len(crops),
-                    ))
-            values, confs, _orients, _oconfs = recognize_crop_arrays(all_crops, True)
-            rows = []
-            for conv_id, turn_idx, page_idx, dims, rel, scores, start, n in pages_meta:
-                page = kie_build_page(
-                    rel, scores, values[start : start + n], confs[start : start + n],
-                    dims, page_idx=page_idx,
-                )
-                counts = {cls: len(preds) for cls, preds in page["predictions"].items()}
-                rows.append((
-                    conv_id, turn_idx, page_idx,
-                    render_kie_page(page), json.dumps(page["predictions"]), counts,
-                ))
-            yield pd.DataFrame(rows, columns=_COLS)
-
-    return fn
-
-
 def kie_extract(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
-    """KIE pipeline -> one row per page with per-class predictions (fused
-    single-stage plan; see :func:`_make_fused_kie`)."""
-    from ..fixtures.payloads import PAYLOAD_MARK
-
-    if crop_partitions is None:
-        crop_partitions = transcripts.sparkSession.sparkContext.defaultParallelism * 8
-    src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
-        "conv_id", "turn_idx", "text"
-    )
-    src = src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
-    return src.mapInPandas(_make_fused_kie(), schema=KIE_PAGE_SCHEMA)
-
-
-def kie_extract_staged(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
-    """Pre-fusion staged KIE plan (kept for parity testing)."""
-    if crop_partitions is None:
-        crop_partitions = transcripts.sparkSession.sparkContext.defaultParallelism * 2
-    words = recognize(detect_and_crop(decode_pages(transcripts)), num_partitions=crop_partitions)
-    return words.groupBy("conv_id", "turn_idx", "page_idx").applyInPandas(
-        _kie_builder, KIE_PAGE_SCHEMA
-    )
+    """KIE pipeline -> one row per page with per-class predictions: the
+    extraction kernel (`operators.pipeline`) with the KIE sink."""
+    return extract_rows(transcripts, KIE_SINK, crop_partitions)
 
 
 def kie_class_counts(kie_pages: DataFrame) -> DataFrame:
@@ -160,7 +71,7 @@ EXPORT_SCHEMA = "conv_id string, turn_idx int, page_idx int, content string"
 def export_pages(
     built_pages: DataFrame, fmt: str, include_furniture: bool = True
 ) -> DataFrame:
-    """Built pages (operators.build.build_pages output) -> per-page export
+    """Built pages (`operators.pipeline.extract_pages` output) -> per-page export
     string in the requested format (text/markdown/html/hocr);
     ``include_furniture=False`` drops page header / footer / footnote blocks
     from the render (reference `doctr/io/exporters.py:346-347`; labels

@@ -1,365 +1,279 @@
 """The full extraction pipeline: the Spark analogue of
-`OCRPredictor.forward` + `Document.render()`
-(`/root/reference/doctr/models/predictor/pytorch.py:90-206`,
-`/root/reference/doctr/io/exporters.py:416-433`).
+`OCRPredictor.forward` / `KIEPredictor.forward` + `Document.render()`
+(`doctr/models/predictor/pytorch.py:90-206`,
+`doctr/models/kie_predictor/pytorch.py:76-208`,
+`doctr/io/exporters.py:416-433`).
 
-Physical plan (round-7 fused default — ONE heavyweight Arrow stage, zero
-shuffles after the de-skew repartition):
+Physical plan (ONE heavyweight Arrow stage, zero shuffles after the
+de-skew repartition):
 
     scan transcripts
       -> filter contains('<doc:')  [pushed to scan] + project 3 cols
       -> repartition xxhash64(conv_id, turn_idx)  [de-skews + fine-grains]
-      -> mapInPandas fused decode+detect+recognize+build+assemble
-         (everything downstream of decode is a pure function of the turn's
-          own row, so pages/crops/words never cross task boundaries and
-          are never codec-encoded between stages)
+      -> mapInPandas extraction kernel:
+         decode -> detect -> [loc hooks] -> crop -> recognize -> sink
       [-> optional left join back to all turns]
 
-When ``loc_hooks`` are given, the pre-round-7 staged plan runs instead
-(hooks splice DataFrame transforms between detection and recognition):
-
-    ... -> mapInPandas decode -> mapInPandas detect+crop
-      -> repartition xxhash64(full key) -> mapInPandas recognize
-      -> groupBy (conv,turn,page) applyInPandas build
-      -> groupBy (conv,turn) native collect/sort/concat_ws
-
-Both paths share the same per-stage kernels and are parity-tested
-bit-for-bit (tests/test_fused_pipeline.py).
+Everything downstream of decode is a pure function of the turn's own row,
+so pages, crops and words never cross task boundaries and are never
+codec-encoded between stages. The entry points differ only in the SINK that
+turns one turn's recognized pages into output rows: one document row
+(`extract_documents`), one built page per page (`extract_pages`) or one KIE
+page per page (`operators.kie.kie_extract`).
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator, Sequence
+from dataclasses import dataclass
+from typing import NamedTuple
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
-from .build import assemble_documents, build_pages
-from .decode import decode_pages
-from .detect import detect_and_crop
-from .recognize import recognize
+from ..fixtures.payloads import PAYLOAD_MARK, decode_payload
+from ..kernels.builder import PAGE_BREAK
+from ..kernels.detection import extract_crops, snap_boxes
+from .build import build_page_record
+from .detect import make_page_processor
+from .recognize import recognize_crop_arrays
 
-DOC_SCHEMA = (
-    "conv_id string, turn_idx int, extracted_text string, "
-    "n_pages int, n_words int, pages_json array<string>"
-)
-PAGE_ROW_SCHEMA = (
-    "conv_id string, turn_idx int, page_idx int, n_words int, page_text string, page_json string"
-)
+# `OCRPredictor.add_hook` contract (`doctr/models/predictor/base.py:310-316`):
+# one turn's loc_preds, one (N, 5) [xmin, ymin, xmax, ymax, score] float
+# array per page in relative coordinates, in and out
+LocHook = Callable[[list[np.ndarray]], list[np.ndarray]]
 
 
-def _make_fused_extractor(
-    resolve_lines: bool,
-    resolve_blocks: bool,
-    paragraph_break: float,
-    detect_crop_orientation: bool,
-    keep_reading_order: bool,
-    mask_region_labels: tuple[str, ...] | None,
-    straighten_pages: bool,
-    reco_arch: str,
-    reco_vocab: str,
-    det_arch: str,
-    text_direction: str | None,
-    include_furniture: bool,
-    det_input_size: tuple[int, int] | None,
-    det_preserve_aspect_ratio: bool,
-    det_symmetric_pad: bool,
-    emit: str = "docs",
-):
-    """The whole per-turn pipeline (decode -> detect -> recognize -> build
-    -> assemble) as ONE mapInPandas kernel. ``emit="pages"`` stops before
-    the per-turn assembly and yields one built-page row per page (the
-    `build_pages` output contract, used by the export surface).
+@dataclass(frozen=True)
+class KernelOptions:
+    """Every settable value of the extraction kernel (reference
+    `ocr_predictor` option defaults)."""
 
-    Everything downstream of payload decode depends only on data produced
-    from that turn's own row: a turn's pages, crops, words and page builds
-    never mix with another turn's. The staged pipeline still shuffled the
-    heavy intermediates twice (crop bytes to re-balance recognition, word
-    rows into the per-page groupBy) plus a third exchange for per-turn
-    assembly; hashing on (conv_id, turn_idx) BEFORE decode already spreads
-    turns uniformly — including skewed long conversations, whose turns
-    hash apart — so the fused kernel computes the final document row with
-    ZERO further shuffles and no page/crop codec round-trips (guide §2.4 /
-    §8: decide with small rows, move heavy bytes never). Per-stage
-    semantics are the exact shared kernels the staged operators use
-    (`detect.make_page_processor`, `recognize.recognize_crop_arrays`,
-    `build.build_page_record`), so fused == staged bit-for-bit; the staged
-    path remains for `loc_hooks` (which splice user DataFrame transforms
-    between detection and recognition).
-    """
-    import json
+    resolve_lines: bool = True
+    resolve_blocks: bool = False
+    paragraph_break: float = 0.035
+    detect_crop_orientation: bool = True
+    keep_reading_order: bool = False
+    mask_region_labels: tuple[str, ...] | None = None
+    straighten_pages: bool = False
+    reco_arch: str = "ctc"
+    reco_vocab: str = "french"
+    det_arch: str = "db_like"
+    text_direction: str | None = None
+    include_furniture: bool = True
+    det_input_size: tuple[int, int] | None = None
+    det_preserve_aspect_ratio: bool = True
+    det_symmetric_pad: bool = True
 
-    import numpy as np
-    import pandas as pd
 
-    from ..fixtures.payloads import decode_payload
-    from ..kernels.builder import PAGE_BREAK
-    from ..kernels.detection import extract_crops
-    from .build import build_page_record
-    from .detect import make_page_processor
-    from .recognize import recognize_crop_arrays
+class RecognizedPage(NamedTuple):
+    """One page after recognition, as a sink sees it: detection output
+    (page-relative boxes) plus the parallel per-word recognition lists."""
 
-    _COLS = ["conv_id", "turn_idx", "extracted_text", "n_pages", "n_words", "pages_json"]
-    _PAGE_COLS = ["conv_id", "turn_idx", "page_idx", "n_words", "page_text", "page_json"]
+    page_idx: int
+    dims: tuple[int, int]
+    orient: int
+    orient_conf: float
+    regions: dict | None
+    tables: list | None
+    rel_boxes: np.ndarray
+    scores: np.ndarray
+    values: list[str]
+    confs: list[float]
+    crop_orients: list[tuple[int, float]]
+
+
+class Sink(NamedTuple):
+    """The per-turn end of the kernel: ``rows(conv_id, turn_idx, pages,
+    opts)`` returns output tuples in ``columns`` order, typed by
+    ``schema``."""
+
+    schema: str
+    columns: tuple[str, ...]
+    rows: Callable[[str, int, list[RecognizedPage], KernelOptions], list[tuple]]
+
+
+def make_kernel(sink: Sink, opts: KernelOptions, hooks: Sequence[LocHook] = ()):
+    """The whole per-turn pipeline as ONE mapInPandas function.
+
+    Per Arrow batch: phase A decodes each turn, runs the page processor,
+    applies ``hooks`` to the turn's loc_preds and copies the word crops out
+    (page buffers are freed after each turn; crop area << page area); phase B
+    recognizes every crop of the batch in one fixed-size batched forward;
+    phase C hands each turn's recognized pages to ``sink``. Corrupt payloads
+    quarantine their turn; disclosed env gates (`NotImplementedError`) fail
+    loudly."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         process_page = make_page_processor(
-            mask_region_labels, straighten_pages, det_arch, keep_reading_order,
-            det_input_size, det_preserve_aspect_ratio, det_symmetric_pad,
-        )
+            opts.mask_region_labels, opts.straighten_pages, opts.det_arch,
+            opts.keep_reading_order,  # the layout-aware builder reads the regions
+            opts.det_input_size, opts.det_preserve_aspect_ratio, opts.det_symmetric_pad,
+        )  # fmt: skip
         for pdf in batches:
-            # phase A — decode + detect: per turn, render payload pages and
-            # run the page processor; word crops are copied out so the page
-            # buffer is freed immediately (crop area << page area)
-            turns: list = []  # (conv_id, turn_idx, [page records])
+            turns: list = []  # (conv_id, turn_idx, [(page fields, crop span)])
             all_crops: list = []
             for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
                 try:
-                    pages = decode_payload(text)
+                    images = decode_payload(text)
                 except NotImplementedError:
-                    raise  # disclosed env gates must fail loudly
+                    raise
                 except Exception:
-                    continue  # quarantine the corrupt turn (same as staged decode)
+                    continue  # quarantine the corrupt turn
+                detected = [process_page(img) for img in images]
+                if hooks:
+                    detected = _apply_hooks(detected, hooks)
                 recs = []
-                for page_idx, img in enumerate(pages):
-                    img, orient, orient_conf, regions, tables, abs_boxes, rel_boxes, scores = (
-                        process_page(img)
-                    )
-                    crops = extract_crops(img, abs_boxes)
+                for page_idx, page in enumerate(detected):
+                    img, orient, oconf, regions, tables, abs_boxes, rel, scores = page
                     start = len(all_crops)
-                    all_crops.extend(np.ascontiguousarray(c) for c in crops)
-                    recs.append((
-                        page_idx,
-                        (int(img.shape[0]), int(img.shape[1])),
-                        orient, float(orient_conf),
-                        regions, tables, rel_boxes, scores,
-                        start, len(crops),
-                    ))
+                    all_crops.extend(np.ascontiguousarray(c) for c in extract_crops(img, abs_boxes))
+                    dims = (int(img.shape[0]), int(img.shape[1]))
+                    fields = (page_idx, dims, orient, float(oconf), regions, tables, rel, scores)
+                    recs.append((fields, start, len(all_crops)))
                 if recs:
                     turns.append((conv_id, int(turn_idx), recs))
-            # phase B — recognition over every crop of the batch in one
-            # fixed-size batched forward (same batching as the staged stage)
             values, confs, orients, oconfs = recognize_crop_arrays(
-                all_crops, detect_crop_orientation, reco_arch, reco_vocab
+                all_crops, opts.detect_crop_orientation, opts.reco_arch, opts.reco_vocab
             )
-            # phase C — per-page build + per-turn assembly
-            rows = []
+            rows: list = []
             for conv_id, turn_idx, recs in turns:
-                page_texts, page_jsons = [], []
-                n_words_total = 0
-                for (page_idx, dims, orient, orient_conf, regions, tables,
-                     rel_boxes, scores, start, n) in recs:  # fmt: skip
-                    # identical wire format to the staged aux JSON sideband
-                    raw_tables = json.loads(json.dumps(tables)) if tables else []
-                    layout_regions = (
-                        json.loads(json.dumps({
-                            "boxes": regions["boxes"].tolist(),
-                            "class_names": regions["class_names"],
-                        }))
-                        if keep_reading_order
-                        else None
+                pages = [
+                    RecognizedPage(
+                        *fields, values[a:b], confs[a:b], list(zip(orients[a:b], oconfs[a:b]))
                     )
-                    n_words, text, page_json = build_page_record(
-                        rel_boxes,
-                        scores,
-                        values[start : start + n],
-                        confs[start : start + n],
-                        list(zip(orients[start : start + n], oconfs[start : start + n])),
-                        dims,
-                        page_idx,
-                        raw_tables,
-                        layout_regions,
-                        {"value": int(orient), "confidence": float(orient_conf)},
-                        resolve_lines=resolve_lines,
-                        resolve_blocks=resolve_blocks,
-                        paragraph_break=paragraph_break,
-                        keep_reading_order=keep_reading_order,
-                        text_direction=text_direction,
-                        include_furniture=include_furniture,
-                    )
-                    if emit == "pages":
-                        rows.append((conv_id, turn_idx, page_idx, n_words, text, page_json))
-                        continue
-                    page_texts.append(text)
-                    page_jsons.append(page_json)
-                    n_words_total += n_words
-                if emit != "pages":
-                    rows.append((
-                        conv_id, turn_idx, PAGE_BREAK.join(page_texts),
-                        len(recs), n_words_total, page_jsons,
-                    ))
-            yield pd.DataFrame(rows, columns=_PAGE_COLS if emit == "pages" else _COLS)
+                    for fields, a, b in recs
+                ]
+                rows.extend(sink.rows(conv_id, turn_idx, pages, opts))
+            yield pd.DataFrame(rows, columns=list(sink.columns))
 
     return fn
+
+
+def _apply_hooks(detected: list, hooks: Sequence[LocHook]) -> list:
+    """Run ``hooks`` over one turn's loc_preds and re-derive each page's
+    crop boxes from the returned relative boxes."""
+    loc_preds = [np.column_stack([rel, scores]).astype(np.float64) for *_, rel, scores in detected]
+    for hook in hooks:
+        loc_preds = hook(loc_preds)
+        if len(loc_preds) != len(detected):
+            raise ValueError(
+                f"loc hook {hook!r} returned {len(loc_preds)} page arrays "
+                f"for a {len(detected)}-page turn"
+            )
+    out = []
+    for (img, *page_info, _, _, scores), loc in zip(detected, loc_preds, strict=True):
+        abs_boxes, rel = snap_boxes(loc[:, :4], img.shape[:2])
+        out.append((img, *page_info, abs_boxes, rel, loc[:, 4].astype(scores.dtype)))
+    return out
+
+
+def extract_rows(
+    transcripts: DataFrame,
+    sink: Sink,
+    crop_partitions: int | None = None,
+    opts: KernelOptions = KernelOptions(),
+    hooks: Sequence[LocHook] = (),
+) -> DataFrame:
+    """Payload-turn source + the extraction kernel: the shared plan of every
+    extraction entry point."""
+    if crop_partitions is None:
+        # the de-skew repartition is the ONLY balancing point, so partition
+        # turns finely (8 tasks per core, scale-adaptive via
+        # defaultParallelism) — per-turn cost is heavy-tailed (multi-page
+        # PDFs, table pages) and a short task tail also rides out roaming
+        # per-core stalls. Measured q2 sf0.1/local[32]: 16-65 s at 2x cores
+        # vs 5.4-6.0 s at 8-10x.
+        crop_partitions = transcripts.sparkSession.sparkContext.defaultParallelism * 8
+    src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
+        "conv_id", "turn_idx", "text"
+    )
+    src = src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
+    return src.mapInPandas(make_kernel(sink, opts, hooks), schema=sink.schema)
+
+
+def _build(page: RecognizedPage, opts: KernelOptions) -> tuple[int, str, str]:
+    return build_page_record(
+        page.rel_boxes,
+        page.scores,
+        page.values,
+        page.confs,
+        page.crop_orients,
+        page.dims,
+        page.page_idx,
+        page.tables or [],
+        page.regions if opts.keep_reading_order else None,
+        {"value": int(page.orient), "confidence": page.orient_conf},
+        resolve_lines=opts.resolve_lines,
+        resolve_blocks=opts.resolve_blocks,
+        paragraph_break=opts.paragraph_break,
+        keep_reading_order=opts.keep_reading_order,
+        text_direction=opts.text_direction,
+        include_furniture=opts.include_furniture,
+    )
+
+
+def _document_rows(conv_id, turn_idx, pages, opts):
+    built = [_build(p, opts) for p in pages]
+    return [(
+        conv_id, turn_idx, PAGE_BREAK.join(text for _, text, _ in built),
+        len(built), sum(n for n, _, _ in built), [pj for _, _, pj in built],
+    )]  # fmt: skip
+
+
+def _page_rows(conv_id, turn_idx, pages, opts):
+    return [(conv_id, turn_idx, p.page_idx, *_build(p, opts)) for p in pages]
+
+
+DOCUMENT_SINK = Sink(
+    "conv_id string, turn_idx int, extracted_text string, "
+    "n_pages int, n_words int, pages_json array<string>",
+    ("conv_id", "turn_idx", "extracted_text", "n_pages", "n_words", "pages_json"),
+    _document_rows,
+)
+PAGE_SINK = Sink(
+    "conv_id string, turn_idx int, page_idx int, n_words int, page_text string, page_json string",
+    ("conv_id", "turn_idx", "page_idx", "n_words", "page_text", "page_json"),
+    _page_rows,
+)
 
 
 def extract_documents(
     transcripts: DataFrame,
     crop_partitions: int | None = None,
     include_all_turns: bool = False,
-    resolve_lines: bool = True,
-    resolve_blocks: bool = False,
-    paragraph_break: float = 0.035,
-    detect_crop_orientation: bool = True,
-    keep_reading_order: bool = False,
-    mask_region_labels: tuple[str, ...] | None = None,
-    straighten_pages: bool = False,
-    loc_hooks: Sequence[Callable[[DataFrame], DataFrame]] | None = None,
-    reco_arch: str = "ctc",
-    reco_vocab: str = "french",
-    det_arch: str = "db_like",
-    text_direction: str | None = None,
-    include_furniture: bool = True,
-    det_input_size: tuple[int, int] | None = None,
-    det_preserve_aspect_ratio: bool = True,
-    det_symmetric_pad: bool = True,
+    *,
+    loc_hooks: Sequence[LocHook] | None = None,
+    **options,
 ) -> DataFrame:
     """Run the detection->recognition->reconstruction pipeline.
 
     Returns one row per payload-bearing turn:
     ``(conv_id, turn_idx, extracted_text, n_pages, n_words, pages_json)``,
     or one row per input turn (nulls for prose turns) when
-    ``include_all_turns``.
+    ``include_all_turns``. ``options`` are :class:`KernelOptions` fields.
 
     ``loc_hooks`` is the Spark analogue of `OCRPredictor.add_hook`
-    (`doctr/models/predictor/base.py:310-316`): DataFrame -> DataFrame
-    transforms applied to the localization/crop rows between detection and
-    recognition (e.g. filtering or rewriting boxes). Word sentinel rows
-    (word_idx < 0) must be passed through.
+    (`doctr/models/predictor/base.py:310-316`): each hook maps one turn's
+    loc_preds (one (N, 5) ``[xmin, ymin, xmax, ymax, score]`` relative float
+    array per page) to new loc_preds, between detection and cropping.
     """
-    if crop_partitions is None:
-        sc = transcripts.sparkSession.sparkContext
-        # fused path: the de-skew repartition is the ONLY balancing point,
-        # so partition turns finely (8 tasks per core, scale-adaptive via
-        # defaultParallelism) — per-turn cost is heavy-tailed (multi-page
-        # PDFs, table pages) and a short task tail also rides out this
-        # VM's roaming per-core stalls. Measured q2 sf0.1/local[32]:
-        # 16-65 s at 2x cores vs 5.4-6.0 s at 8-10x. The staged path keeps
-        # the historical 2x (its crop shuffle re-balances downstream).
-        crop_partitions = sc.defaultParallelism * (2 if loc_hooks else 8)
-
-    if not loc_hooks:
-        # fused single-stage path (the default): one de-skew hash
-        # repartition on (conv_id, turn_idx), then the whole
-        # decode->detect->recognize->build->assemble chain runs inside one
-        # mapInPandas — no crop/word/page exchanges, no intermediate page
-        # or crop codec round-trips. `loc_hooks` needs the staged crops
-        # DataFrame, so hooked calls take the staged path below.
-        from ..fixtures.payloads import PAYLOAD_MARK
-
-        src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
-            "conv_id", "turn_idx", "text"
-        )
-        src = src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
-        docs = src.mapInPandas(
-            _make_fused_extractor(
-                resolve_lines,
-                resolve_blocks,
-                paragraph_break,
-                detect_crop_orientation,
-                keep_reading_order,
-                mask_region_labels,
-                straighten_pages,
-                reco_arch,
-                reco_vocab,
-                det_arch,
-                text_direction,
-                include_furniture,
-                det_input_size,
-                det_preserve_aspect_ratio,
-                det_symmetric_pad,
-            ),
-            schema=DOC_SCHEMA,
-        )
-        if include_all_turns:
-            keys = transcripts.select("conv_id", "turn_idx")
-            docs = keys.join(docs, on=["conv_id", "turn_idx"], how="left")
-        return docs
-
-    pages = decode_pages(transcripts)
-    crops = detect_and_crop(
-        pages,
-        mask_region_labels=mask_region_labels,
-        straighten_pages=straighten_pages,
-        det_arch=det_arch,
-        # reading order is layout-aware: the builder needs the layout
-        # predictor's (label, box) regions to rank roles + attach captions
-        carry_layout=keep_reading_order,
-        # optional PreProcessor letterbox (fixed model input size with
-        # aspect-preserving resize + symmetric pad) before detection
-        det_input_size=det_input_size,
-        det_preserve_aspect_ratio=det_preserve_aspect_ratio,
-        det_symmetric_pad=det_symmetric_pad,
+    docs = extract_rows(
+        transcripts, DOCUMENT_SINK, crop_partitions, KernelOptions(**options), loc_hooks or ()
     )
-    for hook in loc_hooks or ():
-        crops = hook(crops)
-    words = recognize(
-        crops,
-        num_partitions=crop_partitions,
-        detect_orientation=detect_crop_orientation,
-        arch=reco_arch,
-        vocab=reco_vocab,
-    )
-    built = build_pages(
-        words,
-        resolve_lines=resolve_lines,
-        resolve_blocks=resolve_blocks,
-        paragraph_break=paragraph_break,
-        keep_reading_order=keep_reading_order,
-        text_direction=text_direction,
-        include_furniture=include_furniture,
-    )
-    docs = assemble_documents(built)
-
     if include_all_turns:
         keys = transcripts.select("conv_id", "turn_idx")
         docs = keys.join(docs, on=["conv_id", "turn_idx"], how="left")
     return docs
 
 
-def extract_pages(
-    transcripts: DataFrame,
-    crop_partitions: int | None = None,
-    resolve_lines: bool = True,
-    resolve_blocks: bool = False,
-    paragraph_break: float = 0.035,
-    detect_crop_orientation: bool = True,
-) -> DataFrame:
-    """Fused pipeline stopping at BUILT PAGES: one row per page with the
-    `operators.build.build_pages` output contract
-    ``(conv_id, turn_idx, page_idx, n_words, page_text, page_json)`` —
-    the shared input of the export surface, computed in one Arrow stage
-    instead of the staged decode/detect/recognize/groupBy chain."""
-    sc = transcripts.sparkSession.sparkContext
-    if crop_partitions is None:
-        crop_partitions = sc.defaultParallelism * 8
-    from ..fixtures.payloads import PAYLOAD_MARK
-
-    src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
-        "conv_id", "turn_idx", "text"
-    )
-    src = src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
-    return src.mapInPandas(
-        _make_fused_extractor(
-            resolve_lines,
-            resolve_blocks,
-            paragraph_break,
-            detect_crop_orientation,
-            False,
-            None,
-            False,
-            "ctc",
-            "french",
-            "db_like",
-            None,
-            True,
-            None,
-            True,
-            True,
-            emit="pages",
-        ),
-        schema=PAGE_ROW_SCHEMA,
-    )
+def extract_pages(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
+    """The pipeline stopping at BUILT PAGES: one row per page
+    ``(conv_id, turn_idx, page_idx, n_words, page_text, page_json)`` — the
+    shared input of the export surface (`operators.kie.export_documents`)."""
+    return extract_rows(transcripts, PAGE_SINK, crop_partitions)
 
 
 def ordered(docs: DataFrame) -> DataFrame:

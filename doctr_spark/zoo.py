@@ -17,39 +17,46 @@ frames, `attention` cuts at <eos> — the CRNN vs ViTSTR decode semantics).
 
 from __future__ import annotations
 
-from collections.abc import Callable, Sequence
-from dataclasses import dataclass, field
+from collections.abc import Callable
+from dataclasses import asdict, dataclass, field, fields
 
 from pyspark.sql import DataFrame
 
+from .operators.pipeline import KernelOptions, LocHook, extract_documents
+
 DET_ARCHS = ("db_like", "fast_like", "linknet_like")  # threshold presets (kernels.detection.DET_PRESETS)
 RECO_ARCHS = ("ctc", "attention")
+
+
+_K = KernelOptions()  # the predictor's defaults are the kernel's
+# KernelOptions field -> predictor field named after the reference zoo kwarg
+_RENAMED = {"det_preserve_aspect_ratio": "preserve_aspect_ratio", "det_symmetric_pad": "symmetric_pad"}
 
 
 @dataclass
 class OCRPredictor:
     """Configured extraction pipeline (the `OCRPredictor` analogue)."""
 
-    det_arch: str = "db_like"
-    reco_arch: str = "ctc"
-    resolve_lines: bool = True
-    resolve_blocks: bool = False
-    paragraph_break: float = 0.035
-    detect_crop_orientation: bool = True
-    straighten_pages: bool = False
-    keep_reading_order: bool = False
-    text_direction: str | None = None
-    mask_region_labels: tuple[str, ...] | None = None
+    det_arch: str = _K.det_arch
+    reco_arch: str = _K.reco_arch
+    resolve_lines: bool = _K.resolve_lines
+    resolve_blocks: bool = _K.resolve_blocks
+    paragraph_break: float = _K.paragraph_break
+    detect_crop_orientation: bool = _K.detect_crop_orientation
+    straighten_pages: bool = _K.straighten_pages
+    keep_reading_order: bool = _K.keep_reading_order
+    text_direction: str | None = _K.text_direction
+    mask_region_labels: tuple[str, ...] | None = _K.mask_region_labels
     crop_partitions: int | None = None
     include_all_turns: bool = False
-    include_furniture: bool = True
-    reco_vocab: str = "french"
+    include_furniture: bool = _K.include_furniture
+    reco_vocab: str = _K.reco_vocab
     # PreProcessor parity (reference zoo.py preserve_aspect_ratio /
     # symmetric_pad kwargs + the det arch's fixed input shape)
-    det_input_size: tuple[int, int] | None = None
-    preserve_aspect_ratio: bool = True
-    symmetric_pad: bool = True
-    hooks: list[Callable[[DataFrame], DataFrame]] = field(default_factory=list)
+    det_input_size: tuple[int, int] | None = _K.det_input_size
+    preserve_aspect_ratio: bool = _K.det_preserve_aspect_ratio
+    symmetric_pad: bool = _K.det_symmetric_pad
+    hooks: list[LocHook] = field(default_factory=list)
 
     def __post_init__(self) -> None:
         if self.det_arch not in DET_ARCHS:
@@ -57,34 +64,28 @@ class OCRPredictor:
         if self.reco_arch not in RECO_ARCHS:
             raise ValueError(f"reco_arch must be one of {RECO_ARCHS}")
 
-    def add_hook(self, hook: Callable[[DataFrame], DataFrame]) -> None:
-        """Register a crop-level transform applied between detection and
-        recognition (`doctr/models/predictor/base.py:310-316`)."""
+    def add_hook(self, hook: LocHook) -> None:
+        """Register a localization hook (`doctr/models/predictor/base.py:
+        310-316`): ``hook(loc_preds) -> loc_preds`` runs inside the
+        extraction kernel between detection and cropping, once per turn.
+        ``loc_preds`` holds one (N, 5) float array ``[xmin, ymin, xmax,
+        ymax, score]`` per page in relative [0, 1] coordinates; the crop
+        boxes are re-derived from the returned boxes."""
         self.hooks.append(hook)
 
-    def __call__(self, transcripts: DataFrame) -> DataFrame:
-        from .operators.pipeline import extract_documents
+    def kernel_options(self) -> KernelOptions:
+        """This predictor's settings as the extraction kernel's options."""
+        return KernelOptions(
+            **{f.name: getattr(self, _RENAMED.get(f.name, f.name)) for f in fields(KernelOptions)}
+        )
 
+    def __call__(self, transcripts: DataFrame) -> DataFrame:
         return extract_documents(
             transcripts,
             crop_partitions=self.crop_partitions,
             include_all_turns=self.include_all_turns,
-            resolve_lines=self.resolve_lines,
-            resolve_blocks=self.resolve_blocks,
-            paragraph_break=self.paragraph_break,
-            detect_crop_orientation=self.detect_crop_orientation,
-            keep_reading_order=self.keep_reading_order,
-            mask_region_labels=self.mask_region_labels,
-            straighten_pages=self.straighten_pages,
             loc_hooks=self.hooks,
-            reco_arch=self.reco_arch,
-            reco_vocab=self.reco_vocab,
-            det_arch=self.det_arch,
-            text_direction=self.text_direction,
-            include_furniture=self.include_furniture,
-            det_input_size=self.det_input_size,
-            det_preserve_aspect_ratio=self.preserve_aspect_ratio,
-            det_symmetric_pad=self.symmetric_pad,
+            **asdict(self.kernel_options()),
         )
 
 

@@ -1,136 +1,125 @@
-"""Fused-vs-staged extraction parity.
+"""Golden outputs of the extraction kernel.
 
-Round-7 optimization collapsed the default extraction pipeline into one
-mapInPandas stage (`pipeline._make_fused_extractor`): no crop/word/page
-exchanges, no page/crop codec round-trips. The staged path is still
-reachable via ``loc_hooks`` (an identity hook forces it), and both paths
-share the same per-stage kernels — these tests pin the bit-for-bit
-equality on every fixture family / parameter combination the declared
-queries use.
+Each case pins the sha256 of one entry point's sorted output rows on one
+fixture family and option combination: every `extract_documents` option
+the declared queries use, ``include_all_turns``, `kie_extract` and
+`extract_pages`. The digests were taken while the fused kernel and the
+former staged DataFrame chain were still proven equal row for row, so any
+changed text, word count, page JSON or KIE prediction fails here. An
+intended output change re-pins them: ``python tests/test_fused_pipeline.py``
+prints the current digests.
 """
 
 from __future__ import annotations
 
+import hashlib
+import json
+
 import pytest
 
-from doctr_spark.operators.pipeline import extract_documents
+from doctr_spark.operators.kie import kie_extract
+from doctr_spark.operators.pipeline import extract_documents, extract_pages
 
-IDENTITY_HOOK = [lambda df: df]  # forces the staged (pre-fusion) path
+ENTRY_POINTS = {"docs": extract_documents, "kie": kie_extract, "pages": extract_pages}
+
+# id -> (input, entry point, options, sha256 of the sorted output rows)
+CASES = {
+    "synthetic": ("synthetic", "docs", {},
+        "d791b68517b0459ef29f8d1305515a32764108decf940656427f2cfa50a20ec4"),
+    "documents": ("documents", "docs", {},
+        "f2ed4182933155185734f9cfcb04bd6cbd8c4978f4c4c34b74b763a08ef4f891"),
+    "skewed-straighten": ("skewed", "docs", {"straighten_pages": True},
+        "d57690ced7bd51173520a70d0773cbd1581048917521eb382d0485d0979c2653"),
+    "resampled-straighten": ("resampled", "docs", {"straighten_pages": True},
+        "a4ee10c2417ae1163c75bc1d55e74365a67d4ce7da0632bb9b2cfafe1c89a9e0"),
+    "rtl": ("rtl", "docs", {"reco_vocab": "rtl", "text_direction": "auto"},
+        "4b6507dc0daf01172ace844e1df5076633b72b8dac321b95dfda79b2dea388d4"),
+    "multicolumn-reading-order": ("multicolumn", "docs", {"keep_reading_order": True},
+        "51d13653915e160fd4aa4129f68a52eac7c7577723bac82156adfde75a3360ae"),
+    "multicolumn-no-furniture": (
+        "multicolumn", "docs", {"keep_reading_order": True, "include_furniture": False},
+        "95fcf30e6ff50659a796406e3b344ac71c467d42245953efaaa5e205cecf580f"),
+    "accents": ("accents", "docs", {},
+        "cff7f496312571151a005c437951bd2c2545b3a08a3157d00a737feb7c2e662d"),
+    "pdf": ("pdf", "docs", {},
+        "c99c1a54b77d92107134bf77ac9efd3caeb13d959f0f0cb54afb447f497d83e5"),
+    "mask-picture": ("regions", "docs", {"mask_region_labels": ("picture",)},
+        "a39742e712f6f38a2478b05dfa146bf7dca9a9afc725a4154f6d271dc5f7fcd9"),
+    "no-crop-orientation": ("regions", "docs", {"detect_crop_orientation": False},
+        "a39742e712f6f38a2478b05dfa146bf7dca9a9afc725a4154f6d271dc5f7fcd9"),
+    "resolve-blocks": ("regions", "docs", {"resolve_blocks": True},
+        "e6151564742bece3f1cf121abbaf3bdb70b529054caf88714ddeed997e034932"),
+    "attention": ("regions", "docs", {"reco_arch": "attention"},
+        "2bd2d2a5835fb5b5155ef239d1a56a2ee8323a5f9c767ffb3cc56ea15e3c8fa4"),
+    "fast-like": ("regions", "docs", {"det_arch": "fast_like"},
+        "e3a0c83dd12163729a6252aa0f0d4dafeee4b11bfe3c1cd54ec55b29393217b0"),
+    "letterbox": ("regions", "docs", {"det_input_size": (256, 512)},
+        "5d0b19bdb0e9302357da28fcf1686f790ea55013f2de2b86b15f839a631cf94c"),
+    "include-all-turns": ("all_turns", "docs", {"include_all_turns": True},
+        "14b34ebdef84c7d78bb5e6a5d8a874391dcdcb0e049d337cbb0efd6abec86d21"),
+    "kie": ("kie_pages", "kie", {},
+        "1d0caa4cdcbbca0a373267a3925282c0d5f649ee46a2cc41106580b46c22db64"),
+    "pages": ("kie_pages", "pages", {},
+        "c8ce62724f0776777a1b272cb99aa5c79717715987f88a9c883b9d25fb84b39c"),
+}  # fmt: skip
 
 
-def _rows(df):
+def _inputs(spark) -> dict:
+    from doctr_spark.fixtures.accents import generate_accented_transcripts
+    from doctr_spark.fixtures.multicolumn import generate_multicolumn_transcripts
+    from doctr_spark.fixtures.pdfdocs import generate_pdf_transcripts
+    from doctr_spark.fixtures.regions import generate_region_transcripts
+    from doctr_spark.fixtures.resample import generate_resampled_transcripts
+    from doctr_spark.fixtures.rtl import generate_rtl_transcripts
+    from doctr_spark.fixtures.skew import generate_skewed_transcripts
+    from doctr_spark.fixtures.transcripts import generate_transcripts
+    from doctr_spark.io.sources import transcripts_from_documents
+    from test_entry_contract import SF_DIR  # the sf0.001 test tables (TESTDATA.md)
+
     return {
-        (r["conv_id"], r["turn_idx"]): (
-            r["extracted_text"],
-            r["n_pages"],
-            r["n_words"],
-            tuple(r["pages_json"]) if r["pages_json"] is not None else None,
-        )
-        for r in df.collect()
+        "synthetic": lambda: generate_transcripts(spark, 40),
+        "documents": lambda: transcripts_from_documents(spark, SF_DIR),
+        "skewed": lambda: generate_skewed_transcripts(spark, 10),
+        "resampled": lambda: generate_resampled_transcripts(spark, 6),
+        "rtl": lambda: generate_rtl_transcripts(spark, 8),
+        "multicolumn": lambda: generate_multicolumn_transcripts(spark, 8),
+        "accents": lambda: generate_accented_transcripts(spark, 8),
+        "pdf": lambda: generate_pdf_transcripts(spark, 12),
+        "regions": lambda: generate_region_transcripts(spark, 6),
+        "all_turns": lambda: generate_transcripts(spark, 20),
+        "kie_pages": lambda: generate_transcripts(spark, 30),
     }
 
 
-def _assert_parity(tdf, **kwargs):
-    fused = _rows(extract_documents(tdf, **kwargs))
-    staged = _rows(extract_documents(tdf, loc_hooks=IDENTITY_HOOK, **kwargs))
-    assert fused == staged
-    assert len(fused) > 0
+def digest(df) -> str:
+    """sha256 of the output rows, each as JSON, sorted."""
+    lines = sorted(json.dumps(list(r), sort_keys=True) for r in df.collect())
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
 
 
-def test_fused_parity_synthetic(spark):
-    from doctr_spark.fixtures.transcripts import generate_transcripts
-
-    tdf = generate_transcripts(spark, 40).persist()
-    tdf.count()
-    _assert_parity(tdf)
-    tdf.unpersist()
+def _run(tdf, case: str):
+    _, entry, options, _ = CASES[case]
+    return ENTRY_POINTS[entry](tdf, **options)
 
 
-def test_fused_parity_documents_derived(spark):
-    from doctr_spark.io.sources import transcripts_from_documents
+@pytest.fixture(scope="module")
+def inputs(spark):
+    makers, cache = _inputs(spark), {}
 
-    _assert_parity(transcripts_from_documents(spark, "/root/testdata/sf0.001"))
+    def get(name):
+        if name not in cache:
+            cache[name] = makers[name]().persist()
+        return cache[name]
 
-
-def test_fused_parity_skewed_straighten(spark):
-    from doctr_spark.fixtures.skew import generate_skewed_transcripts
-
-    tdf = generate_skewed_transcripts(spark, 10).persist()
-    tdf.count()
-    _assert_parity(tdf, straighten_pages=True)
-    tdf.unpersist()
-
-
-def test_fused_parity_resampled(spark):
-    from doctr_spark.fixtures.resample import generate_resampled_transcripts
-
-    tdf = generate_resampled_transcripts(spark, 6).persist()
-    tdf.count()
-    _assert_parity(tdf, straighten_pages=True)
-    tdf.unpersist()
+    yield get
+    for df in cache.values():
+        df.unpersist()
 
 
-def test_fused_parity_rtl(spark):
-    from doctr_spark.fixtures.rtl import generate_rtl_transcripts
-
-    tdf = generate_rtl_transcripts(spark, 8).persist()
-    tdf.count()
-    _assert_parity(tdf, reco_vocab="rtl", text_direction="auto")
-    tdf.unpersist()
-
-
-def test_fused_parity_multicolumn_reading_order(spark):
-    from doctr_spark.fixtures.multicolumn import generate_multicolumn_transcripts
-
-    tdf = generate_multicolumn_transcripts(spark, 8).persist()
-    tdf.count()
-    _assert_parity(tdf, keep_reading_order=True)
-    _assert_parity(tdf, keep_reading_order=True, include_furniture=False)
-    tdf.unpersist()
-
-
-def test_fused_parity_accents(spark):
-    from doctr_spark.fixtures.accents import generate_accented_transcripts
-
-    tdf = generate_accented_transcripts(spark, 8).persist()
-    tdf.count()
-    _assert_parity(tdf)
-    tdf.unpersist()
-
-
-def test_fused_parity_pdf(spark):
-    from doctr_spark.fixtures.pdfdocs import generate_pdf_transcripts
-
-    tdf = generate_pdf_transcripts(spark, 12).persist()
-    tdf.count()
-    _assert_parity(tdf)
-    tdf.unpersist()
-
-
-def test_fused_parity_mask_and_variants(spark):
-    from doctr_spark.fixtures.regions import generate_region_transcripts
-
-    tdf = generate_region_transcripts(spark, 6).persist()
-    tdf.count()
-    _assert_parity(tdf, mask_region_labels=("picture",))
-    _assert_parity(tdf, detect_crop_orientation=False)
-    _assert_parity(tdf, resolve_blocks=True)
-    _assert_parity(tdf, reco_arch="attention")
-    _assert_parity(tdf, det_arch="fast_like")
-    _assert_parity(tdf, det_input_size=(256, 512))
-    tdf.unpersist()
-
-
-def test_fused_parity_include_all_turns(spark):
-    from doctr_spark.fixtures.transcripts import generate_transcripts
-
-    tdf = generate_transcripts(spark, 20).persist()
-    tdf.count()
-    fused = extract_documents(tdf, include_all_turns=True)
-    staged = extract_documents(tdf, include_all_turns=True, loc_hooks=IDENTITY_HOOK)
-    assert _rows(fused) == _rows(staged)
-    assert fused.count() == tdf.count()
-    tdf.unpersist()
+@pytest.mark.parametrize("case", list(CASES))
+def test_golden_output(inputs, case):
+    name, _, _, want = CASES[case]
+    assert digest(_run(inputs(name), case)) == want
 
 
 def test_fused_quarantines_corrupt_payloads(spark):
@@ -147,58 +136,17 @@ def test_fused_quarantines_corrupt_payloads(spark):
         }
     )
     tdf = spark.createDataFrame(rows)
-    assert extract_documents(tdf, crop_partitions=2).count() == 0
+    for entry in ENTRY_POINTS.values():
+        assert entry(tdf, crop_partitions=2).count() == 0, entry.__name__
 
 
-def test_fused_kie_parity(spark):
-    """kie_extract's fused single-stage plan must equal the staged
-    decode->detect->recognize->KIE-build pipeline row for row."""
-    from doctr_spark.fixtures.transcripts import generate_transcripts
-    from doctr_spark.operators.kie import kie_extract, kie_extract_staged
+if __name__ == "__main__":
+    from doctr_spark.session import get_spark
 
-    tdf = generate_transcripts(spark, 30).persist()
-    tdf.count()
-
-    def rows(df):
-        return {
-            (r["conv_id"], r["turn_idx"], r["page_idx"]): (
-                r["kie_text"],
-                r["predictions_json"],
-                dict(r["class_counts"]),
-            )
-            for r in df.collect()
-        }
-
-    fused = rows(kie_extract(tdf, crop_partitions=8))
-    staged = rows(kie_extract_staged(tdf, crop_partitions=8))
-    assert fused == staged and len(fused) > 0
-    tdf.unpersist()
-
-
-def test_fused_extract_pages_parity(spark):
-    """extract_pages (fused, page-level emit) must equal the staged
-    build_pages(recognize(detect_and_crop(decode_pages(...)))) chain."""
-    from doctr_spark.fixtures.transcripts import generate_transcripts
-    from doctr_spark.operators.build import build_pages
-    from doctr_spark.operators.decode import decode_pages
-    from doctr_spark.operators.detect import detect_and_crop
-    from doctr_spark.operators.pipeline import extract_pages
-    from doctr_spark.operators.recognize import recognize
-
-    tdf = generate_transcripts(spark, 30).persist()
-    tdf.count()
-
-    def rows(df):
-        return {
-            (r["conv_id"], r["turn_idx"], r["page_idx"]): (
-                r["n_words"],
-                r["page_text"],
-                r["page_json"],
-            )
-            for r in df.collect()
-        }
-
-    fused = rows(extract_pages(tdf, crop_partitions=8))
-    staged = rows(build_pages(recognize(detect_and_crop(decode_pages(tdf)), num_partitions=8)))
-    assert fused == staged and len(fused) > 0
-    tdf.unpersist()
+    spark = get_spark(master="local[4]", app_name="golden_digests", shuffle_partitions=4)
+    spark.sparkContext.setLogLevel("ERROR")
+    makers = _inputs(spark)
+    for case, (name, _, _, want) in CASES.items():
+        got = digest(_run(makers[name](), case))
+        print(f"{case}: {got}{'' if got == want else '  (changed)'}")
+    spark.stop()

@@ -81,7 +81,7 @@ def test_detect_stage_mask_region_labels(spark):
     from doctr_spark.fixtures.payloads import make_img_payload
     from doctr_spark.kernels.glyphs import draw_word
     from doctr_spark.operators.decode import decode_pages
-    from doctr_spark.operators.detect import detect_and_crop
+    from doctr_spark.operators.detect import detect_boxes
 
     img = np.zeros((256, 512), dtype=np.uint8)
     draw_word(img, 20, 8, "chrome")     # lands in the page_header band
@@ -91,8 +91,8 @@ def test_detect_stage_mask_region_labels(spark):
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.current_timestamp())
     pages = decode_pages(t, num_partitions=2)
-    all_words = detect_and_crop(pages).where("word_idx >= 0").count()
-    kept = detect_and_crop(pages, mask_region_labels=("page_header", "page_footer")).where(
+    all_words = detect_boxes(pages).where("word_idx >= 0").count()
+    kept = detect_boxes(pages, mask_region_labels=("page_header", "page_footer")).where(
         "word_idx >= 0"
     ).count()
     assert (all_words, kept) == (2, 1)
@@ -125,7 +125,7 @@ def test_mask_picture_regions_in_pipeline(spark):
     from doctr_spark.kernels.artefacts import draw_artefact
     from doctr_spark.kernels.glyphs import draw_word
     from doctr_spark.operators.decode import decode_pages
-    from doctr_spark.operators.detect import detect_and_crop
+    from doctr_spark.operators.detect import detect_boxes
     from doctr_spark.operators.pipeline import extract_documents
 
     canvas = np.zeros((PAGE_H, PAGE_W), np.uint8)
@@ -135,8 +135,8 @@ def test_mask_picture_regions_in_pipeline(spark):
         [("c0", 0, "user", f"see {make_img_payload(canvas)}", None, dt.datetime(2024, 1, 1))],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    crops = detect_and_crop(decode_pages(tdf), mask_region_labels=("picture",))
-    assert crops.where("word_idx >= 0").count() == 1  # only the word detected
+    boxes = detect_boxes(decode_pages(tdf), mask_region_labels=("picture",))
+    assert boxes.where("word_idx >= 0").count() == 1  # only the word detected
     row = extract_documents(tdf, mask_region_labels=("picture",), crop_partitions=2).first()
     assert row["extracted_text"] == "hello" and row["n_words"] == 1
 

@@ -88,14 +88,11 @@ def test_kie_pipeline_spark(spark):
 
 def test_export_formats_spark(spark):
     from doctr_spark.fixtures.transcripts import generate_transcripts
-    from doctr_spark.operators.build import build_pages
-    from doctr_spark.operators.decode import decode_pages
-    from doctr_spark.operators.detect import detect_and_crop
     from doctr_spark.operators.kie import export_documents
-    from doctr_spark.operators.recognize import recognize
+    from doctr_spark.operators.pipeline import extract_pages
 
     tdf = generate_transcripts(spark, 6)
-    built = build_pages(recognize(detect_and_crop(decode_pages(tdf)), num_partitions=4))
+    built = extract_pages(tdf, crop_partitions=4)
     html = export_documents(built, "html").collect()
     assert len(html) > 0
     assert any("<p>" in r["content"] for r in html if r["content"])

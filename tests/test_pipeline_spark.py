@@ -72,23 +72,11 @@ def test_payload_predicate_pushdown(spark, tmp_path):
     assert "text" in plan and "StringContains" in plan.replace("string_contains", "StringContains") or "contains" in plan
 
 
-def test_loc_hooks_filter_crops(spark):
-    """The add_hook analogue: a crop-level DataFrame transform between
-    detection and recognition."""
-    from pyspark.sql import functions as F  # noqa: N812
-
-    from doctr_spark.fixtures.transcripts import generate_transcripts
-
+def test_loc_hooks_filter_crops(spark, check_loc_hooks):
+    """The add_hook analogue: hooks rewrite one turn's loc_preds between
+    detection and cropping, inside the extraction kernel."""
     tdf = generate_transcripts(spark, 6)
-    base = extract_documents(tdf, crop_partitions=4)
-    base_words = base.agg(F.sum("n_words")).first()[0]
-
-    def drop_left_half(crops):
-        return crops.where((F.col("word_idx") < 0) | (F.col("xmin") >= 0.5))
-
-    hooked = extract_documents(tdf, crop_partitions=4, loc_hooks=[drop_left_half])
-    hooked_words = hooked.agg(F.sum("n_words")).first()[0]
-    assert 0 < hooked_words < base_words
+    check_loc_hooks(lambda hooks: extract_documents(tdf, crop_partitions=4, loc_hooks=hooks))
 
 
 def test_non_text_regions_do_not_crash_or_leak(spark):

@@ -13,6 +13,14 @@ def test_factory_validation():
         ocr_predictor(reco_arch="nope")
 
 
+def test_predictor_defaults_are_kernel_defaults():
+    from doctr_spark.operators.pipeline import KernelOptions
+
+    assert ocr_predictor().kernel_options() == KernelOptions()
+    opts = ocr_predictor(symmetric_pad=False, det_input_size=(64, 128)).kernel_options()
+    assert not opts.det_symmetric_pad and opts.det_input_size == (64, 128)
+
+
 def test_attention_arch_matches_ctc(spark):
     tdf, gdf = generate_transcripts(spark, 8, with_gt=True)
     for arch in ("ctc", "attention"):
@@ -25,18 +33,16 @@ def test_attention_arch_matches_ctc(spark):
         assert n > 0 and match == n, arch
 
 
-def test_add_hook_and_kie_factory(spark):
+def test_add_hook_and_kie_factory(spark, check_loc_hooks):
     tdf = generate_transcripts(spark, 6)
-    predictor = ocr_predictor(crop_partitions=4)
-    calls = []
 
-    def hook(crops):
-        calls.append(1)
-        return crops
+    def run(hooks):
+        predictor = ocr_predictor(crop_partitions=4)
+        for hook in hooks:
+            predictor.add_hook(hook)
+        return predictor(tdf)
 
-    predictor.add_hook(hook)
-    assert predictor(tdf).count() > 0
-    assert calls  # hook participated in plan construction
+    check_loc_hooks(run)
 
     kie = kie_predictor(crop_partitions=4)
     assert kie(tdf).count() > 0

@@ -32,7 +32,7 @@ def evaluate(spark: SparkSession, img_folder: str, label_file: str) -> dict:
 
     from doctr_spark.io.datasets import load_ocr_dataset
     from doctr_spark.operators.decode import decode_pages
-    from doctr_spark.operators.detect import detect_and_crop
+    from doctr_spark.operators.detect import detect_boxes
     from doctr_spark.operators.metrics import localization_per_page
     from doctr_spark.operators.pipeline import extract_documents
 
@@ -80,9 +80,9 @@ def evaluate(spark: SparkSession, img_folder: str, label_file: str) -> dict:
         (F.lower("extracted_text") == F.lower("gt_text")).cast("int").alias("caseless"),
     )
 
-    # crop rows carry relative boxes + page dims; GT geometry is absolute
+    # detection rows carry relative boxes + page dims; GT geometry is absolute
     preds = (
-        detect_and_crop(decode_pages(tdf))
+        detect_boxes(decode_pages(tdf))
         .where(F.col("word_idx") >= 0)
         .groupBy("conv_id")
         .agg(
