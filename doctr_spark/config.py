@@ -39,7 +39,7 @@ PARAGRAPH_BREAK = 0.035  # builder.py:58 default paragraph_break
 BLOCK_CLUSTER_T = 0.1  # builder.py fclusterdata(t=0.1) distance threshold
 
 # --- Spark job tuning --------------------------------------------------------
-DEFAULT_SHUFFLE_PARTITIONS = 32
+DEFAULT_SHUFFLE_PARTITIONS = 32  # floor; get_spark uses max(this, 2 x cores)
 # Arrow batch size for the image-bearing stages: pages are ~tens of KB
 # compressed, keep batches modest so executor memory stays bounded.
 ARROW_MAX_RECORDS = 1024

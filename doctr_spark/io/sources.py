@@ -22,6 +22,16 @@ def clean_tokens(col):
     return F.trim(F.regexp_replace(F.regexp_replace(F.lower(col), "[^a-z0-9 ]", " "), " +", " "))
 
 
+def shuffle_partitions(spark: SparkSession) -> int:
+    """``spark.sql.shuffle.partitions`` as a count. A value that is not a
+    number (``auto`` on some managed platforms) or a missing one falls back
+    to ``defaultParallelism``."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def scan_parallel(df: DataFrame, *keys) -> DataFrame:
     """Input-parallelism guard for small or unsplittable scans (guide
     §2.5, "input skew"): a table that fits one file split would otherwise
@@ -46,8 +56,7 @@ def scan_parallel(df: DataFrame, *keys) -> DataFrame:
     if df.rdd.getNumPartitions() >= p:
         return df
     if keys:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        return df.repartition(n, *keys)
+        return df.repartition(shuffle_partitions(spark), *keys)
     return df.repartition(p)
 
 

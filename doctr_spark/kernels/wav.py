@@ -34,7 +34,8 @@ def encode_wav(samples: np.ndarray, rate: int = 16000) -> bytes:
 def decode_wav(blob: bytes) -> tuple[np.ndarray, int]:
     """WAVE bytes -> (samples int16 (n, channels), sample_rate). Walks
     the RIFF chunk list (real writers interleave LIST/fact/cue chunks);
-    anything but integer PCM rejects loudly."""
+    anything but integer PCM rejects loudly. An empty ``data`` chunk is a
+    legal zero-sample clip: (0, channels) samples."""
     if blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE stream")
     pos = 12
@@ -54,8 +55,6 @@ def decode_wav(blob: bytes) -> tuple[np.ndarray, int]:
     tag, ch, rate, _brate, _block, bits = fmt
     if ch < 1:
         raise ValueError(f"malformed fmt chunk: NumChannels = {ch}")
-    if len(data) == 0:
-        raise ValueError("empty WAVE data chunk")
     if tag != 1:
         raise NotImplementedError(
             f"WAVE format tag {tag} (non-PCM/compressed) is outside the codec subset"
@@ -81,6 +80,8 @@ def audio_features(
         a = a.mean(axis=1)
     a /= 32768.0
     n = len(a)
+    if not n:  # a zero-sample clip has the features of one silent sample
+        a = np.zeros(1)
     frame = max(int(rate * frame_ms / 1000), 1)
     n_frames = max(n // frame, 1)
     trimmed = a[: n_frames * frame].reshape(n_frames, frame) if n >= frame else a[None, :]

@@ -42,7 +42,9 @@ KIE_SINK = Sink(
 
 def kie_extract(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
     """KIE pipeline -> one row per page with per-class predictions: the
-    extraction kernel (`operators.pipeline`) with the KIE sink."""
+    extraction kernel (`operators.pipeline`) with the KIE sink.
+    ``crop_partitions`` as in `operators.pipeline.extract_rows` (None:
+    AQE-sized)."""
     return extract_rows(transcripts, KIE_SINK, crop_partitions)
 
 

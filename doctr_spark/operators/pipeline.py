@@ -9,7 +9,7 @@ de-skew repartition):
 
     scan transcripts
       -> filter contains('<doc:')  [pushed to scan] + project 3 cols
-      -> repartition xxhash64(conv_id, turn_idx)  [de-skews + fine-grains]
+      -> repartition xxhash64(conv_id, turn_idx)  [de-skews; AQE-sized]
       -> mapInPandas extraction kernel:
          decode -> detect -> [loc hooks] -> crop -> recognize -> sink
       [-> optional left join back to all turns]
@@ -36,9 +36,16 @@ from pyspark.sql import functions as F  # noqa: N812
 from ..fixtures.payloads import PAYLOAD_MARK, decode_payload
 from ..kernels.builder import PAGE_BREAK
 from ..kernels.detection import extract_crops, snap_boxes
+from ..kernels.recognition import RECO_BATCH
 from .build import build_page_record
 from .detect import make_page_processor
 from .recognize import recognize_crop_arrays
+
+# pending word crops that trigger recognition inside a task: a whole
+# number of fixed-size model batches and the bound on kernel memory, which
+# peaks at ~12 KB per pending crop during recognition (about 35 crops per
+# payload turn on the benchmark's mixed payloads)
+CROP_FLUSH = 4 * RECO_BATCH
 
 # `OCRPredictor.add_hook` contract (`doctr/models/predictor/base.py:310-316`):
 # one turn's loc_preds, one (N, 5) [xmin, ymin, xmax, ymax, score] float
@@ -98,13 +105,15 @@ class Sink(NamedTuple):
 def make_kernel(sink: Sink, opts: KernelOptions, hooks: Sequence[LocHook] = ()):
     """The whole per-turn pipeline as ONE mapInPandas function.
 
-    Per Arrow batch: phase A decodes each turn, runs the page processor,
-    applies ``hooks`` to the turn's loc_preds and copies the word crops out
-    (page buffers are freed after each turn; crop area << page area); phase B
-    recognizes every crop of the batch in one fixed-size batched forward;
-    phase C hands each turn's recognized pages to ``sink``. Corrupt payloads
-    quarantine their turn; disclosed env gates (`NotImplementedError`) fail
-    loudly."""
+    Phase A decodes each turn, runs the page processor, applies ``hooks``
+    to the turn's loc_preds and copies the word crops out (page buffers are
+    freed after each turn; crop area << page area). Once CROP_FLUSH crops
+    are pending, and at the end of the task, phase B recognizes them in
+    fixed-size batched forwards and phase C hands each pending turn's
+    recognized pages to ``sink``, so the crops held are bounded by
+    CROP_FLUSH plus one turn's, not by the task's share of turns. Corrupt
+    payloads quarantine their turn; disclosed env gates
+    (`NotImplementedError`) fail loudly."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         process_page = make_page_processor(
@@ -112,9 +121,27 @@ def make_kernel(sink: Sink, opts: KernelOptions, hooks: Sequence[LocHook] = ()):
             opts.keep_reading_order,  # the layout-aware builder reads the regions
             opts.det_input_size, opts.det_preserve_aspect_ratio, opts.det_symmetric_pad,
         )  # fmt: skip
+        turns: list = []  # (conv_id, turn_idx, [(page fields, crop span)])
+        crops: list = []
+
+        def flush() -> pd.DataFrame:
+            values, confs, orients, oconfs = recognize_crop_arrays(
+                crops, opts.detect_crop_orientation, opts.reco_arch, opts.reco_vocab
+            )
+            rows: list = []
+            for conv_id, turn_idx, recs in turns:
+                pages = [
+                    RecognizedPage(
+                        *fields, values[a:b], confs[a:b], list(zip(orients[a:b], oconfs[a:b]))
+                    )
+                    for fields, a, b in recs
+                ]
+                rows.extend(sink.rows(conv_id, turn_idx, pages, opts))
+            turns.clear()
+            crops.clear()
+            return pd.DataFrame(rows, columns=list(sink.columns))
+
         for pdf in batches:
-            turns: list = []  # (conv_id, turn_idx, [(page fields, crop span)])
-            all_crops: list = []
             for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
                 try:
                     images = decode_payload(text)
@@ -128,26 +155,17 @@ def make_kernel(sink: Sink, opts: KernelOptions, hooks: Sequence[LocHook] = ()):
                 recs = []
                 for page_idx, page in enumerate(detected):
                     img, orient, oconf, regions, tables, abs_boxes, rel, scores = page
-                    start = len(all_crops)
-                    all_crops.extend(np.ascontiguousarray(c) for c in extract_crops(img, abs_boxes))
+                    start = len(crops)
+                    crops.extend(np.ascontiguousarray(c) for c in extract_crops(img, abs_boxes))
                     dims = (int(img.shape[0]), int(img.shape[1]))
                     fields = (page_idx, dims, orient, float(oconf), regions, tables, rel, scores)
-                    recs.append((fields, start, len(all_crops)))
+                    recs.append((fields, start, len(crops)))
                 if recs:
                     turns.append((conv_id, int(turn_idx), recs))
-            values, confs, orients, oconfs = recognize_crop_arrays(
-                all_crops, opts.detect_crop_orientation, opts.reco_arch, opts.reco_vocab
-            )
-            rows: list = []
-            for conv_id, turn_idx, recs in turns:
-                pages = [
-                    RecognizedPage(
-                        *fields, values[a:b], confs[a:b], list(zip(orients[a:b], oconfs[a:b]))
-                    )
-                    for fields, a, b in recs
-                ]
-                rows.extend(sink.rows(conv_id, turn_idx, pages, opts))
-            yield pd.DataFrame(rows, columns=list(sink.columns))
+                if len(crops) >= CROP_FLUSH:
+                    yield flush()
+        if turns:
+            yield flush()
 
     return fn
 
@@ -178,19 +196,20 @@ def extract_rows(
     hooks: Sequence[LocHook] = (),
 ) -> DataFrame:
     """Payload-turn source + the extraction kernel: the shared plan of every
-    extraction entry point."""
-    if crop_partitions is None:
-        # the de-skew repartition is the ONLY balancing point, so partition
-        # turns finely (8 tasks per core, scale-adaptive via
-        # defaultParallelism) — per-turn cost is heavy-tailed (multi-page
-        # PDFs, table pages) and a short task tail also rides out roaming
-        # per-core stalls. Measured q2 sf0.1/local[32]: 16-65 s at 2x cores
-        # vs 5.4-6.0 s at 8-10x.
-        crop_partitions = transcripts.sparkSession.sparkContext.defaultParallelism * 8
+    extraction entry point.
+
+    ``crop_partitions=None`` leaves the partition count of the de-skew
+    exchange to AQE, which coalesces it by shuffle bytes towards one task
+    per core: every Python task pays a fixed worker setup cost
+    (`tools/probe_task_overhead.py`) that more, smaller tasks multiply.
+    AQE only merges partitions, so the stage runs at most
+    ``spark.sql.shuffle.partitions`` tasks; `session.get_spark` defaults
+    that to at least 2x cores. An int forces exactly that many tasks."""
     src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
         "conv_id", "turn_idx", "text"
     )
-    src = src.repartition(crop_partitions, F.xxhash64("conv_id", "turn_idx"))
+    key = F.xxhash64("conv_id", "turn_idx")
+    src = src.repartition(key) if crop_partitions is None else src.repartition(crop_partitions, key)
     return src.mapInPandas(make_kernel(sink, opts, hooks), schema=sink.schema)
 
 
@@ -259,6 +278,8 @@ def extract_documents(
     (`doctr/models/predictor/base.py:310-316`): each hook maps one turn's
     loc_preds (one (N, 5) ``[xmin, ymin, xmax, ymax, score]`` relative float
     array per page) to new loc_preds, between detection and cropping.
+    ``crop_partitions``: None lets AQE size the extraction stage, an int
+    fixes its task count (:func:`extract_rows`).
     """
     docs = extract_rows(
         transcripts, DOCUMENT_SINK, crop_partitions, KernelOptions(**options), loc_hooks or ()
@@ -272,7 +293,8 @@ def extract_documents(
 def extract_pages(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
     """The pipeline stopping at BUILT PAGES: one row per page
     ``(conv_id, turn_idx, page_idx, n_words, page_text, page_json)`` — the
-    shared input of the export surface (`operators.kie.export_documents`)."""
+    shared input of the export surface (`operators.kie.export_documents`).
+    ``crop_partitions`` as in :func:`extract_rows` (None: AQE-sized)."""
     return extract_rows(transcripts, PAGE_SINK, crop_partitions)
 
 

@@ -5,8 +5,8 @@ Spark analogue of `RecognitionPredictor.forward`
 split into overlapping windows, each window goes through the model forward
 + CTC best-path decode, and the window predictions are merged back — all
 inside the kernel, local to one crop. The extraction kernel
-(`operators.pipeline`) calls it once per Arrow batch over every crop of the
-batch.
+(`operators.pipeline`) calls it over the crops pending in a task, every
+`CROP_FLUSH` crops.
 """
 
 from __future__ import annotations

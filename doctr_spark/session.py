@@ -17,6 +17,9 @@ def get_spark(
 ) -> SparkSession:
     """Build a session with AQE + Arrow enabled.
 
+    ``shuffle_partitions`` defaults to ``max(DEFAULT_SHUFFLE_PARTITIONS,
+    2 * defaultParallelism)``.
+
     On a real cluster the same config ships via spark-submit; ``master``
     here defaults to ``local[N]`` from $SPARK_GRAFT_CPUS for sandbox runs.
     """
@@ -31,9 +34,11 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # the UDF stages are CPU-heavy per *byte*: a few MB of compressed
-        # pages is minutes of decode/detect work, so never let AQE coalesce
-        # their shuffles down to a handful of tasks on byte-size grounds
+        # AQE sizes the extraction exchange (pipeline.extract_rows): with
+        # parallelismFirst it aims at about one partition per core (never
+        # more than shuffle.partitions), and this floor keeps a tiny input
+        # in few tasks, since each Python task costs a fixed worker setup
+        # (tools/probe_task_overhead.py)
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # the crop/page shuffles are the engine's dominant memory traffic
         # and the 32-core regime is bandwidth-saturated (BENCH.md round-5
@@ -51,4 +56,10 @@ def get_spark(
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    if shuffle_partitions is None and "spark.sql.shuffle.partitions" not in (extra_conf or {}):
+        # AQE only merges partitions, so this count caps the tasks of the
+        # extraction exchange (pipeline.extract_rows): grow it with the cores
+        cores = spark.sparkContext.defaultParallelism
+        spark.conf.set("spark.sql.shuffle.partitions", str(max(DEFAULT_SHUFFLE_PARTITIONS, 2 * cores)))
+    return spark

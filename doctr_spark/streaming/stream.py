@@ -36,7 +36,9 @@ def stream_extraction(
     max_files_per_trigger: int = 8,
 ) -> StreamingQuery:
     """Watch ``input_dir`` for transcript parquet files and extract them
-    incrementally. Returns the started StreamingQuery."""
+    incrementally. Returns the started StreamingQuery. ``crop_partitions``
+    is passed to `extract_documents` per micro-batch: None lets AQE size
+    each batch's extraction stage, an int fixes its task count."""
     source = (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)

@@ -47,7 +47,7 @@ class OCRPredictor:
     keep_reading_order: bool = _K.keep_reading_order
     text_direction: str | None = _K.text_direction
     mask_region_labels: tuple[str, ...] | None = _K.mask_region_labels
-    crop_partitions: int | None = None
+    crop_partitions: int | None = None  # None: AQE-sized (pipeline.extract_rows)
     include_all_turns: bool = False
     include_furniture: bool = _K.include_furniture
     reco_vocab: str = _K.reco_vocab
@@ -95,7 +95,8 @@ def ocr_predictor(det_arch: str = "db_like", reco_arch: str = "ctc", **kwargs) -
 
 def kie_predictor(crop_partitions: int | None = None) -> Callable[[DataFrame], DataFrame]:
     """KIE variant (`kie_predictor`, zoo.py:250-325): per-class prediction
-    pages instead of Line/Block nesting."""
+    pages instead of Line/Block nesting. ``crop_partitions``: None lets AQE
+    size the extraction stage, an int fixes its task count."""
     from .operators.kie import kie_extract
 
     def predictor(transcripts: DataFrame) -> DataFrame:

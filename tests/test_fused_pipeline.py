@@ -122,6 +122,88 @@ def test_golden_output(inputs, case):
     assert digest(_run(inputs(name), case)) == want
 
 
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_default_exchange_is_aqe_sized(inputs):
+    """Without ``crop_partitions`` the de-skew exchange is a by-column
+    repartition that AQE may coalesce, with the golden output; an explicit
+    count still forces a fixed-count exchange with the same output."""
+    tdf = inputs("synthetic")
+    docs = extract_documents(tdf)
+    plan = _plan(docs)
+    assert "hashpartitioning(xxhash64(conv_id#" in plan, plan
+    assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
+    assert digest(docs) == CASES["synthetic"][3]
+    fixed = extract_documents(tdf, crop_partitions=32)
+    assert "REPARTITION_BY_NUM" in _plan(fixed)
+    assert digest(fixed) == CASES["synthetic"][3]
+
+
+def test_small_input_runs_few_python_tasks(spark):
+    """One payload turn runs its Arrow stage in one task: AQE coalesces the
+    exchange instead of keeping a task per shuffle partition (or the former
+    8 per core), each paying a Python worker's fixed setup cost."""
+    import pandas as pd
+
+    from doctr_spark.fixtures.transcripts import gen_conversation
+
+    turn = next(t for t in gen_conversation(0)[0] if "<doc:" in t["text"])
+    tdf = spark.createDataFrame(pd.DataFrame([turn])[["conv_id", "turn_idx", "text"]])
+    rdd = extract_documents(tdf).rdd  # the adaptive plan's final partitions
+    assert rdd.count() == 1
+    assert rdd.getNumPartitions() == 1 < spark.sparkContext.defaultParallelism * 8
+
+
+def test_session_shuffle_partitions_grow_with_cores(spark, monkeypatch):
+    """AQE only merges partitions, so ``spark.sql.shuffle.partitions`` caps
+    the AQE-sized extraction stage: `get_spark` defaults it to at least
+    2x cores, and an explicit count or ``extra_conf`` entry still wins."""
+    from doctr_spark import session
+
+    key = "spark.sql.shuffle.partitions"
+    cores = spark.sparkContext.defaultParallelism
+    monkeypatch.setattr(session, "DEFAULT_SHUFFLE_PARTITIONS", 1)
+    try:
+        assert session.get_spark(master="local[4]").conf.get(key) == str(2 * cores)
+        assert session.get_spark(master="local[4]", shuffle_partitions=3).conf.get(key) == "3"
+        assert session.get_spark(master="local[4]", extra_conf={key: "5"}).conf.get(key) == "5"
+    finally:
+        spark.conf.set(key, "4")  # the shared test session's count
+
+
+def test_crop_flush_keeps_output(monkeypatch):
+    """Recognizing pending crops every 64 crops instead of once per task
+    changes no output byte (recognition is per crop). Spark-free: the
+    kernel runs in-process on one Arrow-batch-sized frame."""
+    import pandas as pd
+
+    from doctr_spark.fixtures.transcripts import gen_conversation
+    from doctr_spark.operators import pipeline
+
+    turns = [t for c in range(6) for t in gen_conversation(c)[0] if "<doc:" in t["text"]]
+    pdf = pd.DataFrame(turns)[["conv_id", "turn_idx", "text"]]
+
+    recognize, calls = pipeline.recognize_crop_arrays, []
+    monkeypatch.setattr(
+        pipeline, "recognize_crop_arrays", lambda *a: calls.append(1) or recognize(*a)
+    )
+
+    def run() -> tuple[str, int]:
+        calls.clear()
+        kernel = pipeline.make_kernel(pipeline.DOCUMENT_SINK, pipeline.KernelOptions())
+        out = pd.concat(list(kernel(iter([pdf]))), ignore_index=True)
+        return out.to_json(orient="records"), len(calls)
+
+    monkeypatch.setattr(pipeline, "CROP_FLUSH", 10**9)
+    whole, n_whole = run()
+    monkeypatch.setattr(pipeline, "CROP_FLUSH", 64)
+    flushed, n_flushed = run()
+    assert n_whole == 1 and n_flushed > 2
+    assert flushed == whole
+
+
 def test_fused_quarantines_corrupt_payloads(spark):
     import pandas as pd
 

@@ -141,8 +141,8 @@ def test_wav_pcm_roundtrip_and_features():
 
 
 def test_wav_malformed_fmt_rejects_loudly():
-    """ch == 0 or an empty data chunk must raise the codec's loud
-    ValueError, not a ZeroDivisionError / NaN features downstream."""
+    """ch == 0 must raise the codec's loud ValueError, not a
+    ZeroDivisionError downstream."""
     import struct
 
     import numpy as np
@@ -155,8 +155,23 @@ def test_wav_malformed_fmt_rejects_loudly():
     zero_ch = blob[: fmt_at + 2] + struct.pack("<H", 0) + blob[fmt_at + 4 :]
     with pytest.raises(ValueError, match="NumChannels"):
         decode_wav(zero_ch)
-    i = blob.index(b"data")
-    empty = blob[:i] + b"data" + struct.pack("<I", 0)
-    empty = empty[:4] + struct.pack("<I", len(empty) - 8) + empty[8:]
-    with pytest.raises(ValueError, match="empty WAVE data"):
-        decode_wav(empty)
+
+
+@pytest.mark.parametrize("bits", [8, 16])
+@pytest.mark.parametrize("ch", [1, 2])
+def test_wav_zero_sample_clip(bits, ch):
+    """An empty data chunk is a legal zero-sample clip: (0, ch) int16
+    samples and the rate, and finite clip features."""
+    import struct
+
+    from doctr_spark.kernels.wav import audio_features, decode_wav
+
+    block = ch * bits // 8
+    fmt = struct.pack("<HHIIHH", 1, ch, 8000, 8000 * block, block, bits)
+    body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt + b"data" + struct.pack("<I", 0)
+    samples, rate = decode_wav(b"RIFF" + struct.pack("<I", len(body)) + body)
+    assert samples.shape == (0, ch) and samples.dtype == np.int16
+    assert rate == 8000
+    f = audio_features(samples, rate)
+    assert f["duration_sec"] == 0.0 and f["peak"] == 0.0
+    assert all(np.isfinite(v) for v in f.values())

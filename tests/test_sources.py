@@ -34,3 +34,23 @@ def test_read_transcripts_table_branch(spark):
         assert n == t.count() > 0
     finally:
         spark.catalog.dropTempView("transcripts_seam")
+
+
+def test_shuffle_partitions_parses_config_safely():
+    """`spark.sql.shuffle.partitions` as managed platforms set it: a count,
+    ``auto`` or nothing; the last two fall back to defaultParallelism.
+    Spark-free: a stand-in session carries only the two fields read."""
+    from types import SimpleNamespace
+
+    from doctr_spark.io.sources import shuffle_partitions
+
+    def session(value):
+        conf = {} if value is None else {"spark.sql.shuffle.partitions": value}
+        return SimpleNamespace(
+            conf=SimpleNamespace(get=conf.get),
+            sparkContext=SimpleNamespace(defaultParallelism=6),
+        )
+
+    assert shuffle_partitions(session("16")) == 16
+    assert shuffle_partitions(session("auto")) == 6
+    assert shuffle_partitions(session(None)) == 6
