@@ -37,6 +37,7 @@ from ..fixtures.payloads import PAYLOAD_MARK, decode_payload
 from ..kernels.builder import PAGE_BREAK
 from ..kernels.detection import extract_crops, snap_boxes
 from ..kernels.recognition import RECO_BATCH
+from ..session import prune_zip_finders
 from .build import build_page_record
 from .detect import make_page_processor
 from .recognize import recognize_crop_arrays
@@ -116,6 +117,7 @@ def make_kernel(sink: Sink, opts: KernelOptions, hooks: Sequence[LocHook] = ()):
     (`NotImplementedError`) fail loudly."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_finders()  # spares this worker's later tasks the zip re-reads
         process_page = make_page_processor(
             opts.mask_region_labels, opts.straighten_pages, opts.det_arch,
             opts.keep_reading_order,  # the layout-aware builder reads the regions

@@ -3,6 +3,8 @@
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -37,8 +39,9 @@ def get_spark(
         # AQE sizes the extraction exchange (pipeline.extract_rows): with
         # parallelismFirst it aims at about one partition per core (never
         # more than shuffle.partitions), and this floor keeps a tiny input
-        # in few tasks, since each Python task costs a fixed worker setup
-        # (tools/probe_task_overhead.py)
+        # in few tasks, since each Python task costs a fixed worker setup:
+        # ~60 ms of worker time once prune_zip_finders has run in the
+        # worker, ~0.25 s before (4 cores, tools/probe_task_overhead.py)
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
         # the crop/page shuffles are the engine's dominant memory traffic
         # and the 32-core regime is bandwidth-saturated (BENCH.md round-5
@@ -63,3 +66,20 @@ def get_spark(
         cores = spark.sparkContext.defaultParallelism
         spark.conf.set("spark.sql.shuffle.partitions", str(max(DEFAULT_SHUFFLE_PARTITIONS, 2 * cores)))
     return spark
+
+
+def prune_zip_finders() -> None:
+    """Drop every `zipimporter` from this process's `sys.path_importer_cache`.
+
+    pyspark's worker calls `importlib.invalidate_caches()` at the start of
+    every task, and under CPython 3.11 each cached zipimporter then re-reads
+    its archive's whole directory: pyspark.zip, the py4j zip and the
+    spark-core jar, ~0.24 s of worker time per task for the 16 a worker
+    holds (4-core box). The cache belongs to the reused worker process, so
+    one call in a UDF body spares every later task on that worker. An
+    import that needs a zip path entry re-creates its finder from
+    zipimport's own directory cache, so imports stay correct.
+    """
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            sys.path_importer_cache.pop(path, None)

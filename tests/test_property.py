@@ -5,7 +5,7 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from doctr_spark.config import GLYPH_H
-from doctr_spark.kernels.cc import component_boxes
+from doctr_spark.kernels.cc import component_boxes, label_runs
 from doctr_spark.kernels.glyphs import draw_word, word_width
 from doctr_spark.kernels.recognition import recognize_crop
 from doctr_spark.kernels.vocab import DEFAULT_VOCAB, decode_sequence, encode_string
@@ -30,17 +30,18 @@ def test_vocab_roundtrip(s):
     assert decode_sequence(encode_string(s)) == s
 
 
-def _flood_fill_boxes(mask):
-    """Brute-force 8-connected component bboxes (oracle for the run-based CC)."""
+def _flood_fill(mask):
+    """Brute-force 8-connected components (oracle for the run-based CC):
+    (sorted bboxes, per-pixel component id, -1 off the mask)."""
     h, w = mask.shape
-    seen = np.zeros_like(mask, dtype=bool)
+    comp = np.full(mask.shape, -1, dtype=np.int64)
     boxes = []
     for sy in range(h):
         for sx in range(w):
-            if not mask[sy, sx] or seen[sy, sx]:
+            if not mask[sy, sx] or comp[sy, sx] >= 0:
                 continue
             stack = [(sy, sx)]
-            seen[sy, sx] = True
+            comp[sy, sx] = len(boxes)
             ys, xs = [], []
             while stack:
                 y, x = stack.pop()
@@ -49,20 +50,35 @@ def _flood_fill_boxes(mask):
                 for dy in (-1, 0, 1):
                     for dx in (-1, 0, 1):
                         ny, nx = y + dy, x + dx
-                        if 0 <= ny < h and 0 <= nx < w and mask[ny, nx] and not seen[ny, nx]:
-                            seen[ny, nx] = True
+                        if 0 <= ny < h and 0 <= nx < w and mask[ny, nx] and comp[ny, nx] < 0:
+                            comp[ny, nx] = len(boxes)
                             stack.append((ny, nx))
             boxes.append((min(xs), min(ys), max(xs) + 1, max(ys) + 1))
-    return sorted(boxes)
+    return sorted(boxes), comp
 
 
 @given(st.integers(0, 2**31 - 1))
 @settings(max_examples=40, deadline=None)
 def test_cc_matches_flood_fill(seed):
+    """Boxes match a flood fill, and every run's label is the minimum run
+    index of its component (the invariant that keeps the order of tied
+    boxes). The tall shape with column-biased density grows long vertical
+    run chains, like the glyph marker bars."""
     rng = np.random.default_rng(seed)
-    mask = rng.random((14, 18)) < 0.35
-    boxes, _ = component_boxes(mask.astype(np.float64), 0.5)
-    assert sorted(map(tuple, boxes.tolist())) == _flood_fill_boxes(mask)
+    masks = [
+        rng.random((14, 18)) < 0.35,
+        rng.random((48, 18)) < rng.uniform(0.05, 0.75, size=18),
+    ]
+    for mask in masks:
+        boxes, _ = component_boxes(mask.astype(np.float64), 0.5)
+        want, comp = _flood_fill(mask)
+        assert sorted(map(tuple, boxes.tolist())) == want
+        rows, starts, _, labels = label_runs(mask)
+        run_comp = comp[rows, starts]
+        first = {}
+        for i, c in enumerate(run_comp.tolist()):
+            first.setdefault(c, i)
+        assert labels.tolist() == [first[c] for c in run_comp.tolist()]
 
 
 @given(st.integers(0, 2**31 - 1), st.integers(2, 12))
