@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 from ..kernels.geometry import box_iou
+from ..session import local_frame
 
 
 def text_match(df: DataFrame, pred: str = "pred", gt: str = "gt") -> DataFrame:
@@ -279,8 +280,8 @@ def _two_level_pr(det: DataFrame, totals: DataFrame) -> DataFrame:
         bt, bk = running.get(key, (0, 0))
         base_rows.append((r["part"], r["cls"], r["thresh"], bt, bk))
         running[key] = (bt + int(r["t"]), bk + int(r["n"]))
-    base_df = spark.createDataFrame(
-        base_rows, "part int, cls long, thresh double, base_tp long, base_k long"
+    base_df = local_frame(
+        spark, base_rows, "part int, cls long, thresh double, base_tp long, base_k long"
     )
     grp = ["part", "cls", "thresh"]
     wl_row = Window.partitionBy(*grp).orderBy("nscore")
@@ -312,8 +313,8 @@ def _two_level_pr(det: DataFrame, totals: DataFrame) -> DataFrame:
         key = (r["cls"], r["thresh"])
         later_rows.append((r["part"], r["cls"], r["thresh"], suffix.get(key, 0.0)))
         suffix[key] = max(suffix.get(key, 0.0), float(r["pmax"]))
-    later_df = spark.createDataFrame(
-        later_rows, "part int, cls long, thresh double, later_max double"
+    later_df = local_frame(
+        spark, later_rows, "part int, cls long, thresh double, later_max double"
     )
     return loc.join(F.broadcast(later_df), grp).withColumn(
         "p_interp", F.greatest("local_suffix_max", "later_max")
@@ -454,7 +455,7 @@ def object_detection_map(
     )
     # every GT class contributes at every threshold (AP=0 when undetected)
     grid = totals.crossJoin(
-        pairs.sparkSession.createDataFrame([(t,) for t in thresholds], "thresh double")
+        local_frame(pairs.sparkSession, [(t,) for t in thresholds], "thresh double")
     )
     return (
         grid.join(ap, ["cls", "thresh"], "left")

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
+from ..session import local_frame
+
 # language-ID heuristic: marker-token hit counts per language
 _LANG_MARKERS = {
     "en": ["the", "and", "with", "for"],
@@ -642,9 +644,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str, context: int = PACK_CONTEXT
     for r in sorted(totals, key=lambda r: r["part"]):
         base[int(r["part"])] = acc
         acc += int(r["part_total"])
-    base_df = spark.createDataFrame(
-        [(p, b) for p, b in base.items()], "part int, part_base long"
-    )
+    base_df = local_frame(spark, list(base.items()), "part int, part_base long")
     w = Window.partitionBy("part").orderBy("doc_id")
     packed = (
         parts.join(F.broadcast(base_df), "part")

@@ -6,7 +6,10 @@ import os
 import sys
 import zipimport
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from .config import ARROW_MAX_RECORDS, DEFAULT_SHUFFLE_PARTITIONS
 
@@ -66,6 +69,26 @@ def get_spark(
         cores = spark.sparkContext.defaultParallelism
         spark.conf.set("spark.sql.shuffle.partitions", str(max(DEFAULT_SHUFFLE_PARTITIONS, 2 * cores)))
     return spark
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small driver-side table as a relation built in the driver JVM.
+
+    ``spark.createDataFrame(<python list>)`` plans a pickled Python RDD
+    (``Scan ExistingRDD``), so its first action starts a second pyspark
+    daemon and a Python worker per partition just to hand the rows to the
+    JVM. A pandas frame under the Arrow setting of `get_spark` plans as a
+    ``LocalTableScan`` instead. pyspark sends an empty pandas frame down
+    the list path, so zero rows go as an empty Arrow table, which also
+    plans as a ``LocalTableScan``. The DDL ``schema`` fixes every type, so
+    nothing is inferred. Arrow reads timestamps in the session time zone (UTC):
+    pass aware datetimes, since a naive one would not keep its instant.
+    """
+    struct = StructType.fromDDL(schema)
+    pdf = pd.DataFrame(rows, columns=struct.names)
+    if pdf.empty:
+        return spark.createDataFrame(to_arrow_schema(struct).empty_table(), struct)
+    return spark.createDataFrame(pdf, struct)
 
 
 def prune_zip_finders() -> None:

@@ -9,10 +9,9 @@ checkpoint, with no state store:
   data-independent partitioning (conversations never straddle buckets, so
   per-turn outputs are complete per bucket);
 * remaining buckets are processed in group passes (default: ALL remaining
-  buckets in ONE pass). Each pass is a single Spark job — one scan of the
-  input — writing the extraction output ``partitionBy("bucket")`` under
-  dynamic partition overwrite (idempotent redo), then appending one
-  manifest row per bucket
+  buckets in ONE pass). Each pass makes one scan of the input and writes
+  the extraction output ``partitionBy("bucket")`` under dynamic partition
+  overwrite (idempotent redo), then appends one manifest row per bucket
   ``(bucket, status, n_turns, n_words, started_at, finished_at, run_id)``.
   The manifest append is the commit point, so a crash mid-pass redoes at
   most one pass. ``buckets_per_pass`` trades input rescans (ceil(todo /
@@ -21,24 +20,43 @@ checkpoint, with no state store:
 * on restart, remaining work = all buckets anti-joined against
   ``manifest.status = 'done'``.
 
+A run is not one Spark job. AQE runs each shuffle as a job of its own,
+so a run makes:
+
+* the done-bucket probe: 2 jobs (shuffle, collect) over the manifest read
+  with ``MANIFEST_SCHEMA``, or none before the first commit;
+* per pass, the extraction write: 2 jobs (the repartition's shuffle, the
+  write);
+* per pass, the stats read-back of the group's partition directories: 2
+  jobs (shuffle, collect), read with ``STATS_SCHEMA``;
+* per pass, the manifest append: 1 job over a driver-side
+  ``LocalTableScan``.
+
+No step infers a schema, and only the extraction kernel starts a Python
+worker.
+
 On Iceberg the manifest is a table and each bucket commit is a snapshot;
-here it is a parquet directory with one file per bucket commit, which has
+here it is a parquet directory with one file per pass commit, which has
 the same append-only, idempotent-redo semantics.
 """
-
 from __future__ import annotations
 
 import datetime as dt
 
 import uuid
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
+
+from ..session import local_frame
 
 MANIFEST_SCHEMA = (
     "bucket int, status string, n_turns long, n_words long, "
     "started_at timestamp, finished_at timestamp, run_id string"
 )
+# the two output columns the per-bucket stats read back
+STATS_SCHEMA = "n_words int, bucket int"
 
 
 def with_bucket(transcripts: DataFrame, n_buckets: int) -> DataFrame:
@@ -51,9 +69,11 @@ def completed_buckets(spark: SparkSession, manifest_dir: str) -> list[int]:
     # probe through Spark's filesystem layer (works on HDFS/S3/local alike,
     # unlike os.path which would silently disable resume on a cluster)
     try:
-        m = spark.read.parquet(manifest_dir)
-    except Exception:  # no manifest yet (AnalysisException: path not found)
-        return []
+        m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_dir)
+    except AnalysisException as e:
+        if e.getCondition() == "PATH_NOT_FOUND":  # no manifest yet
+            return []
+        raise
     return [r["bucket"] for r in m.where(F.col("status") == "done").select("bucket").distinct().collect()]
 
 
@@ -95,7 +115,8 @@ def group_stats_read(spark: SparkSession, output_dir: str, group: list[int]) -> 
     if not paths:
         return None
     return (
-        spark.read.option("basePath", output_dir)
+        spark.read.schema(STATS_SCHEMA)
+        .option("basePath", output_dir)
         .parquet(*paths)
         .groupBy("bucket")
         .agg(F.count("*").alias("n_turns"), F.sum("n_words").alias("n_words"))
@@ -129,7 +150,8 @@ def run_checkpointed(
         processed = 0
         for i in range(0, len(todo), group_size):
             group = todo[i : i + group_size]
-            started = dt.datetime.now()
+            # aware: local_frame reads timestamps in the session time zone
+            started = dt.datetime.now(dt.timezone.utc)
             docs = extract_bucketed(transcripts, n_buckets, group)
             docs.write.mode("overwrite").partitionBy("bucket").parquet(output_dir)
             # stats from the files just written: a second action on `docs`
@@ -139,15 +161,14 @@ def run_checkpointed(
             stats_df = group_stats_read(spark, output_dir, group)
             written = stats_df.collect() if stats_df is not None else []
             stats = {int(r["bucket"]): (int(r["n_turns"]), int(r["n_words"] or 0)) for r in written}
-            finished = dt.datetime.now()
-            manifest_rows = spark.createDataFrame(
-                [
-                    (b, "done", *stats.get(b, (0, 0)), started, finished, run_id)
-                    for b in group
-                ],
+            finished = dt.datetime.now(dt.timezone.utc)
+            manifest_rows = local_frame(
+                spark,
+                [(b, "done", *stats.get(b, (0, 0)), started, finished, run_id) for b in group],
                 MANIFEST_SCHEMA,
             )
-            manifest_rows.write.mode("append").parquet(manifest_dir)
+            # one file per commit: the done probe of every restart reads them all
+            manifest_rows.coalesce(1).write.mode("append").parquet(manifest_dir)
             processed += len(group)
     finally:
         if overwrite_mode is None:

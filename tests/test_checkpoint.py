@@ -1,5 +1,8 @@
 """Resumable checkpointed execution: manifest anti-join on restart."""
 
+import os
+import time
+
 import pytest
 from pyspark.sql import functions as F  # noqa: N812
 
@@ -76,6 +79,43 @@ def test_grouped_passes_commit_per_group(spark, transcripts, tmp_path):
     assert m.count() == 4
     # two passes -> two distinct commit timestamps
     assert m.select("finished_at").distinct().count() == 2
+    # and one manifest file per commit
+    parts = [f for f in os.listdir(manifest) if f.startswith("part-")]
+    assert len(parts) == 2, parts
+
+
+def test_corrupt_manifest_fails_loudly(spark, transcripts, tmp_path):
+    """A manifest file that cannot be read must fail the run, not read as
+    "no manifest yet": that would redo every bucket and append a second
+    `done` row for each."""
+    out = str(tmp_path / "out")
+    manifest = tmp_path / "manifest"
+    manifest.mkdir()
+    (manifest / "part-00000-truncated.snappy.parquet").write_bytes(b"PAR1\x15\x00")
+    before = sorted(os.listdir(manifest))
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_checkpointed(spark, transcripts, out, str(manifest), n_buckets=2)
+    assert sorted(os.listdir(manifest)) == before
+
+
+def test_manifest_timestamps_keep_their_instant(spark, transcripts, tmp_path, monkeypatch):
+    """Under a driver time zone other than the session's (UTC), the
+    manifest's started_at/finished_at still bracket the run's wall-clock
+    instant."""
+    out, manifest = str(tmp_path / "out"), str(tmp_path / "manifest")
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        t0 = time.time()
+        run_checkpointed(spark, transcripts, out, manifest, n_buckets=2)
+        t1 = time.time()
+        rows = spark.read.parquet(manifest).select("started_at", "finished_at").collect()
+        # collected timestamps are naive local times of the driver's zone
+        for r in rows:
+            assert t0 - 1 <= r["started_at"].timestamp() <= r["finished_at"].timestamp() <= t1 + 1
+    finally:
+        monkeypatch.undo()
+        time.tzset()
 
 
 def test_submit_job_entry_point(spark, tmp_path, monkeypatch):

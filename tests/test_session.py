@@ -1,10 +1,14 @@
-"""Spark-free checks of the session module's worker-side helpers."""
+"""Checks of the session module's helpers."""
 
+import inspect
+import pathlib
 import sys
 import zipfile
 import zipimport
 
-from doctr_spark.session import prune_zip_finders
+import pytest
+
+from doctr_spark.session import local_frame, prune_zip_finders
 
 
 def _zip_finders() -> list[str]:
@@ -36,3 +40,21 @@ def test_prune_zip_finders_keeps_imports_working(tmp_path):
         for path in _zip_finders():
             if path.startswith(str(tmp_path)):
                 del sys.path_importer_cache[path]
+
+
+@pytest.mark.parametrize("rows", [[(1, "a", 2.5), (2, None, None)], []], ids=["rows", "empty"])
+def test_local_frame_is_a_local_relation(spark, rows):
+    """No Python RDD (``Scan ExistingRDD``), so no pyspark daemon or
+    worker, for any row count, and the schema is kept as given."""
+    df = local_frame(spark, rows, "k int, s string, x double")
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan
+    assert df.schema.simpleString() == "struct<k:int,s:string,x:double>"
+    assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_create_dataframe_only_in_local_frame():
+    """Engine code builds driver-side tables through `session.local_frame`."""
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "doctr_spark"
+    total = sum(p.read_text().count("createDataFrame(") for p in pkg.rglob("*.py"))
+    assert total == inspect.getsource(local_frame).count("createDataFrame(")
