@@ -18,7 +18,6 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from doctr_spark.io.sources import transcripts_from_documents
 from doctr_spark.operators import dedup, relational, similarity, text_analysis
-from doctr_spark.operators.decode import decode_pages
 from doctr_spark.operators.multimodal import media_metadata
 from doctr_spark.operators.pipeline import extract_documents
 
@@ -367,7 +366,7 @@ def metric_table_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
         "array<struct<cells: array<struct<geometry: array<double>, row_start: int, "
         "row_end: int, col_start: int, col_end: int>>, num_rows: int, num_cols: int>>"
     )
-    boxes = detect_boxes(decode_pages(tdf))
+    boxes = detect_boxes(tdf)
     preds = (
         boxes.where(F.col("word_idx") == -2)
         .select("conv_id", "turn_idx", F.from_json("aux", tables_schema).alias("t"))
@@ -648,13 +647,13 @@ FROM read_parquet('{ORACLE_SCRATCH}/media_gt/*.parquet')
 
 
 def ocr_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary page column -> typed metadata + features.
+    """Multimodal plumbing: payload pages -> typed metadata + features.
     Oracle: generation-time expectation rows (pre-payload canvases)."""
     from doctr_spark.fixtures.transcripts import generate_transcripts
 
     tdf, mdf = generate_transcripts(spark, 50, with_media=True)
     _stage_expectation(mdf, "media_gt")
-    return media_metadata(decode_pages(tdf))
+    return media_metadata(tdf)
 
 
 _LOC_ORACLE = f"""
@@ -687,7 +686,7 @@ def metric_localization(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1.0).alias("mean_iou"),
     )
     _stage_expectation(exp, "loc_gt")
-    boxes = detect_boxes(decode_pages(tdf))
+    boxes = detect_boxes(tdf)
     preds = (
         boxes.where(F.col("word_idx") >= 0)
         .groupBy("conv_id", "turn_idx")
@@ -725,7 +724,7 @@ def ocr_artefacts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tdf, gdf = generate_artefact_transcripts(spark, 40, with_gt=True)
     _stage_expectation(gdf, "artefact_gt")
-    return artefact_rows(decode_pages(tdf))
+    return artefact_rows(tdf)
 
 
 _DET_METRIC_ORACLE = f"""
@@ -789,9 +788,7 @@ def metric_artefact_detection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _stage_expectation(exp, "detmetric_gt")
 
-    preds = _group(
-        artefact_rows(decode_pages(tdf)), ["xmin", "ymin", "xmax", "ymax"], F.col("label")
-    ).select(
+    preds = _group(artefact_rows(tdf), ["xmin", "ymin", "xmax", "ymax"], F.col("label")).select(
         "conv_id", "turn_idx", "page_idx",
         F.col("boxes").alias("pred_boxes"), F.col("labels").alias("pred_labels"),
     )
@@ -948,7 +945,7 @@ def ocr_layout_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tdf, gdf = generate_region_transcripts(spark, 40, with_gt=True)
     _stage_expectation(gdf, "region_gt")
-    return layout_region_rows(decode_pages(tdf))
+    return layout_region_rows(tdf)
 
 
 _DATASET_ORACLE = f"""

@@ -34,7 +34,7 @@ def media_meta_row(img: np.ndarray) -> tuple[int, int, int, float, str]:
     """(height, width, n_bytes, ink_ratio, feature_json) for one page raster.
 
     `n_bytes` is the engine-codec size of the page (`imgcodec.encode_page`),
-    i.e. the size of the binary column the decode stage materializes.
+    i.e. its size in the payload packing format.
     """
     from .imgcodec import encode_page
 

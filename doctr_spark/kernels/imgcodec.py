@@ -1,9 +1,12 @@
-"""Compact byte codecs for page images flowing between Spark stages.
+"""The engine's page-image codec: the payload packing format.
 
-Pages travel between UDF stages as compressed bytes in a BinaryType column
-(never as raw pixel arrays in Spark rows) — the analogue of keeping pages
-PNG-encoded between docTR stages. zlib on the sparse glyph bitmaps gives
-~50-100x reduction, which is what makes the image-bearing shuffle cheap.
+`<doc:img>` and `<doc:pdf>` payloads (`fixtures.payloads`) carry pages as
+a (height, width) header plus zlib-compressed uint8 grayscale pixels
+(`encode_page`), or as real PNGs, which `decode_page` sniffs; the
+multipage stand-in is a length-prefixed run of encoded pages. Decoded pages
+never travel between Spark stages: every payload query decodes inside the
+task that consumes the pages (`operators.pipeline`). `encode_page` also
+defines `media_metadata.n_bytes` (`kernels.features.media_meta_row`).
 """
 
 from __future__ import annotations

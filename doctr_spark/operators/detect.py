@@ -4,30 +4,23 @@
 (`doctr/models/detection/...`) with its page-level companions (straighten,
 layout regions, ignore-region masking, table structure) as one per-page
 function; the extraction kernel (`operators.pipeline`) crops and recognizes
-its boxes. `detect_boxes` runs the same processor as a Spark stage over
-decoded page rows for the queries that read detections only (localization
-and table-cell metrics).
+its boxes. `detect_boxes` runs the same processor on the kernel's source
+and decode loop (`pipeline.map_pages`) for the queries that read
+detections only (localization and table-cell metrics).
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..kernels.detection import detect_words
-from ..kernels.imgcodec import decode_page
 
 BOXES_SCHEMA = (
     "conv_id string, turn_idx int, page_idx int, page_h int, page_w int, "
     "word_idx int, xmin double, ymin double, xmax double, ymax double, aux string"
 )
-_COLS = [
-    "conv_id", "turn_idx", "page_idx", "page_h", "page_w",
-    "word_idx", "xmin", "ymin", "xmax", "ymax", "aux",
-]  # fmt: skip
 
 
 def make_page_processor(
@@ -131,27 +124,26 @@ def make_page_processor(
     return process_page
 
 
-def detect_boxes(pages: DataFrame, mask_region_labels: tuple[str, ...] | None = None) -> DataFrame:
-    """Decoded page rows (`operators.decode.decode_pages`) -> detection rows:
-    one per word box (``word_idx >= 0``, page-relative ``xmin..ymax``) and,
-    on pages with ruled tables, one ``word_idx = -2`` row carrying the
-    table-structure prediction as JSON in ``aux``. ``mask_region_labels``
-    blanks those layout regions before detection."""
+def detect_boxes(
+    transcripts: DataFrame, mask_region_labels: tuple[str, ...] | None = None
+) -> DataFrame:
+    """Payload turns -> detection rows: one per word box (``word_idx >=
+    0``, page-relative ``xmin..ymax``) and, on pages with ruled tables, one
+    ``word_idx = -2`` row carrying the table-structure prediction as JSON
+    in ``aux``. ``mask_region_labels`` blanks those layout regions before
+    detection."""
+    from .pipeline import map_pages
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def make_page_fn():
         process_page = make_page_processor(mask_region_labels)
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, page_idx, blob in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["page_idx"], pdf["page"]
-            ):
-                img, _, _, _, tables, _, rel_boxes, _ = process_page(decode_page(bytes(blob)))
-                key = (conv_id, int(turn_idx), int(page_idx), int(img.shape[0]), int(img.shape[1]))
-                if tables:
-                    rows.append(key + (-2, 0.0, 0.0, 0.0, 0.0, json.dumps(tables)))
-                rows.extend(
-                    key + (i, *(float(v) for v in rel), None) for i, rel in enumerate(rel_boxes)
-                )
-            yield pd.DataFrame(rows, columns=_COLS)
 
-    return pages.mapInPandas(fn, schema=BOXES_SCHEMA)
+        def page_rows(img):
+            img, _, _, _, tables, _, rel_boxes, _ = process_page(img)
+            dims = (int(img.shape[0]), int(img.shape[1]))
+            rows = [(*dims, -2, 0.0, 0.0, 0.0, 0.0, json.dumps(tables))] if tables else []
+            rows.extend((*dims, i, *(float(v) for v in rel), None) for i, rel in enumerate(rel_boxes))
+            return rows
+
+        return page_rows
+
+    return map_pages(transcripts, make_page_fn, BOXES_SCHEMA)

@@ -1,28 +1,28 @@
-"""Multimodal column plumbing: opaque binary media + typed metadata.
+"""Multimodal surface: page-level operators and the media codec dispatch.
 
-Image/audio/video payloads are carried as `binary` columns with struct
-metadata; decode / feature-extract run as Arrow-batched `mapInPandas`
-kernels. The page-image codec is real (it is the engine's own raster
-format), as are PNG (`kernels.png`, pure-stdlib), baseline + progressive
-JPEG (`kernels.jpeg`, from-scratch T.81 incl. Annex G), JPEG 2000
-(`kernels.jpx`, from-scratch T.800 — JP2 or raw codestream), and WAV PCM
-audio (`kernels.wav`, from-scratch RIFF walk + frame RMS/ZCR features).
-Remaining media kinds (compressed audio, video) stay STUBBED behind
-`NotImplementedError` — the container has no AV libraries — so the
-Spark-side schema, batching, and partitioning are real and tested while
-the codec swap-in is a one-function change.
+The page operators (media metadata + features, artefacts, layout
+regions) are page functions on the extraction kernel's own source and
+decode loop (`pipeline.map_pages`): each payload is decoded once, inside
+the task that consumes its pages, and no page crosses a stage boundary.
+`decode_media` maps an opaque media blob to an array. The page-image codec
+is real (it is the engine's own payload packing format), as are PNG
+(`kernels.png`, pure-stdlib), baseline + progressive JPEG (`kernels.jpeg`,
+from-scratch T.81 incl. Annex G), JPEG 2000 (`kernels.jpx`, from-scratch
+T.800 — JP2 or raw codestream), and WAV PCM audio (`kernels.wav`,
+from-scratch RIFF walk + frame RMS/ZCR features). Remaining media kinds
+(compressed audio, video) stay STUBBED behind `NotImplementedError` — the
+container has no AV libraries — so the codec swap-in is a one-function
+change.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..kernels.features import N_FEATURES, extract_features, feature_json
+from ..kernels.features import media_meta_row
 from ..kernels.imgcodec import decode_page
+from .pipeline import map_pages
 
 # `feature_json` instead of array<double>: a canonical rounded-JSON string
 # keeps the column hashable/sortable by any engine (correctness harness,
@@ -31,10 +31,6 @@ MEDIA_META_SCHEMA = (
     "conv_id string, turn_idx int, page_idx int, media_kind string, "
     "height int, width int, n_bytes long, ink_ratio double, feature_json string"
 )
-_COLS = [
-    "conv_id", "turn_idx", "page_idx", "media_kind",
-    "height", "width", "n_bytes", "ink_ratio", "feature_json",
-]  # fmt: skip
 
 
 def decode_media(blob: bytes, kind: str) -> np.ndarray:
@@ -68,88 +64,13 @@ def decode_media(blob: bytes, kind: str) -> np.ndarray:
     )
 
 
-def _meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for conv_id, turn_idx, page_idx, blob in zip(
-            pdf["conv_id"], pdf["turn_idx"], pdf["page_idx"], pdf["page"]
-        ):
-            img = decode_media(bytes(blob), "page")
-            rows.append(
-                (
-                    conv_id,
-                    int(turn_idx),
-                    int(page_idx),
-                    "page",
-                    img.shape[0],
-                    img.shape[1],
-                    len(blob),
-                    float((img > 0).mean()),
-                    feature_json(extract_features(img)),
-                )
-            )
-        yield pd.DataFrame(rows, columns=_COLS)
+def _media_rows(img: np.ndarray) -> list[tuple]:
+    return [("page", *media_meta_row(img))]
 
 
-def media_metadata(pages: DataFrame) -> DataFrame:
-    """Page rows (from operators.decode) -> typed media metadata + features."""
-    return pages.mapInPandas(_meta_batches, schema=MEDIA_META_SCHEMA)
-
-
-def _resize_axis(img: np.ndarray, out_n: int, axis: int) -> np.ndarray:
-    n = img.shape[axis]
-    if out_n >= n:  # upscale: nearest-neighbor index map
-        idx = np.clip(np.floor((np.arange(out_n) + 0.5) * n / out_n).astype(np.int64), 0, n - 1)
-        return np.take(img, idx, axis=axis)
-    # downscale: max-pool over the covering input bucket — glyph strokes are
-    # 1 px wide, so center-sampling NN would erase the ink entirely; max
-    # pooling is the binary-ink analogue of cv2.INTER_AREA
-    bucket = np.floor(np.arange(n) * out_n / n).astype(np.int64)
-    starts = np.searchsorted(bucket, np.arange(out_n))
-    return np.maximum.reduceat(img, starts, axis=axis)
-
-
-def resize_media(img: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
-    """Raster resize (the vectorized stand-in for cv2.resize in the
-    reference PreProcessor, which letterboxes pages to the model input
-    shape): nearest-neighbor upscaling, ink-preserving max-pool
-    downscaling. Pure numpy — no interpolation libraries here."""
-    return _resize_axis(_resize_axis(img, out_h, 0), out_w, 1)
-
-
-RESIZED_SCHEMA = (
-    "conv_id string, turn_idx int, page_idx int, height int, width int, page binary"
-)
-
-
-def media_resize(pages: DataFrame, out_h: int, out_w: int) -> DataFrame:
-    """Batch page resize as an Arrow-batched kernel (the PreProcessor
-    resize stage as a standalone operator): every page raster is resized
-    to (out_h, out_w) and re-encoded."""
-    from ..kernels.imgcodec import encode_page
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["conv_id", "turn_idx", "page_idx", "height", "width", "page"]
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, page_idx, blob in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["page_idx"], pdf["page"]
-            ):
-                out = resize_media(decode_media(bytes(blob), "page"), out_h, out_w)
-                rows.append((conv_id, int(turn_idx), int(page_idx), out_h, out_w, encode_page(out)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return pages.mapInPandas(fn, schema=RESIZED_SCHEMA)
-
-
-def media_frame_sample(pages: DataFrame, every_k: int = 2) -> DataFrame:
-    """Frame sampling over a multi-page document's page axis (the exact
-    shape of video frame sampling: an ordered frame index within a media
-    key): keep every k-th page per (conv, turn). Native filter — pushed
-    into the scan, no Python."""
-    from pyspark.sql import functions as F  # noqa: N812
-
-    return pages.where(F.pmod(F.col("page_idx"), F.lit(every_k)) == 0)
+def media_metadata(transcripts: DataFrame) -> DataFrame:
+    """Payload turns -> typed metadata + features, one row per page."""
+    return map_pages(transcripts, lambda: _media_rows, MEDIA_META_SCHEMA)
 
 
 ARTEFACT_SCHEMA = (
@@ -158,53 +79,37 @@ ARTEFACT_SCHEMA = (
 )
 
 
-def artefact_rows(pages: DataFrame, conf_threshold: float = 0.5) -> DataFrame:
+def artefact_rows(transcripts: DataFrame) -> DataFrame:
     """Side artefact predictor over decoded pages (the `ArtefactDetector`
-    contrib surface, `doctr/contrib/artefacts.py:17-129`): one row per
-    detected bar code / QR code / logo / photo with absolute pixel box."""
-    from ..kernels.artefacts import detect_artefacts
+    contrib surface, `doctr/contrib/artefacts.py:17-129`, at its 0.5
+    confidence threshold): one row per detected bar code / QR code / logo /
+    photo with absolute pixel box."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["conv_id", "turn_idx", "page_idx", "label", "xmin", "ymin", "xmax", "ymax"]
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, page_idx, blob in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["page_idx"], pdf["page"]
-            ):
-                img = decode_media(bytes(blob), "page")
-                for r in detect_artefacts(img, conf_threshold):
-                    rows.append(
-                        (conv_id, int(turn_idx), int(page_idx), r["label"], *r["box"])
-                    )
-            yield pd.DataFrame(rows, columns=cols)
+    def make_page_fn():
+        from ..kernels.artefacts import detect_artefacts
 
-    return pages.mapInPandas(fn, schema=ARTEFACT_SCHEMA)
+        return lambda img: [(r["label"], *r["box"]) for r in detect_artefacts(img, 0.5)]
+
+    return map_pages(transcripts, make_page_fn, ARTEFACT_SCHEMA)
 
 
-def layout_region_rows(pages: DataFrame) -> DataFrame:
+def layout_region_rows(transcripts: DataFrame) -> DataFrame:
     """Layout predictor surface over decoded pages (LW-DETR stand-in,
     `kernels.layout.detect_layout_regions`): one row per detected region
     with its DocLayNet-style class and absolute pixel box."""
-    from ..kernels.layout import detect_layout_regions
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["conv_id", "turn_idx", "page_idx", "label", "xmin", "ymin", "xmax", "ymax"]
-        for pdf in batches:
-            rows = []
-            for conv_id, turn_idx, page_idx, blob in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["page_idx"], pdf["page"]
-            ):
-                img = decode_media(bytes(blob), "page")
-                h, w = img.shape
-                regions = detect_layout_regions(img)
-                for box, name in zip(regions["boxes"], regions["class_names"]):
-                    rows.append(
-                        (
-                            conv_id, int(turn_idx), int(page_idx), name,
-                            int(round(box[0] * w)), int(round(box[1] * h)),
-                            int(round(box[2] * w)), int(round(box[3] * h)),
-                        )
-                    )  # fmt: skip
-            yield pd.DataFrame(rows, columns=cols)
+    def make_page_fn():
+        from ..kernels.layout import detect_layout_regions
 
-    return pages.mapInPandas(fn, schema=ARTEFACT_SCHEMA)
+        def page_rows(img):
+            h, w = img.shape
+            regions = detect_layout_regions(img)
+            return [
+                (name, int(round(box[0] * w)), int(round(box[1] * h)),
+                 int(round(box[2] * w)), int(round(box[3] * h)))
+                for box, name in zip(regions["boxes"], regions["class_names"])
+            ]  # fmt: skip
+
+        return page_rows
+
+    return map_pages(transcripts, make_page_fn, ARTEFACT_SCHEMA)

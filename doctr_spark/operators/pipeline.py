@@ -19,7 +19,10 @@ so pages, crops and words never cross task boundaries and are never
 codec-encoded between stages. The entry points differ only in the SINK that
 turns one turn's recognized pages into output rows: one document row
 (`extract_documents`), one built page per page (`extract_pages`) or one KIE
-page per page (`operators.kie.kie_extract`).
+page per page (`operators.kie.kie_extract`). The page queries that need no
+recognition (detections, artefacts, layout regions, media metadata) run a
+page function on the same source and decode loop (`map_pages`), so every
+query reads payloads the same way, in one Arrow stage.
 """
 
 from __future__ import annotations
@@ -47,6 +50,10 @@ from .recognize import recognize_crop_arrays
 # peaks at ~12 KB per pending crop during recognition (about 35 crops per
 # payload turn on the benchmark's mixed payloads)
 CROP_FLUSH = 4 * RECO_BATCH
+
+# output rows a page-level task (`map_pages`) buffers per Arrow batch: the
+# default `spark.sql.execution.arrow.maxRecordsPerBatch`
+PAGE_ROW_FLUSH = 10_000
 
 # `OCRPredictor.add_hook` contract (`doctr/models/predictor/base.py:310-316`):
 # one turn's loc_preds, one (N, 5) [xmin, ymin, xmax, ymax, score] float
@@ -103,6 +110,24 @@ class Sink(NamedTuple):
     rows: Callable[[str, int, list[RecognizedPage], KernelOptions], list[tuple]]
 
 
+def decoded_turns(batches: Iterator[pd.DataFrame]) -> Iterator[tuple[str, int, list]]:
+    """The decode loop of every payload-reading task: ``(conv_id,
+    turn_idx, pages)`` per payload turn of the task's Arrow batches, one
+    uint8 (H, W) array per page. Corrupt payloads quarantine their turn
+    (it yields nothing, like a payload-free turn); disclosed env gates
+    (`NotImplementedError`) fail loudly."""
+    prune_zip_finders()  # spares this worker's later tasks the zip re-reads
+    for pdf in batches:
+        for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
+            try:
+                pages = decode_payload(text)
+            except NotImplementedError:
+                raise
+            except Exception:
+                continue
+            yield conv_id, int(turn_idx), pages
+
+
 def make_kernel(sink: Sink, opts: KernelOptions, hooks: Sequence[LocHook] = ()):
     """The whole per-turn pipeline as ONE mapInPandas function.
 
@@ -117,7 +142,6 @@ def make_kernel(sink: Sink, opts: KernelOptions, hooks: Sequence[LocHook] = ()):
     (`NotImplementedError`) fail loudly."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        prune_zip_finders()  # spares this worker's later tasks the zip re-reads
         process_page = make_page_processor(
             opts.mask_region_labels, opts.straighten_pages, opts.det_arch,
             opts.keep_reading_order,  # the layout-aware builder reads the regions
@@ -143,29 +167,22 @@ def make_kernel(sink: Sink, opts: KernelOptions, hooks: Sequence[LocHook] = ()):
             crops.clear()
             return pd.DataFrame(rows, columns=list(sink.columns))
 
-        for pdf in batches:
-            for conv_id, turn_idx, text in zip(pdf["conv_id"], pdf["turn_idx"], pdf["text"]):
-                try:
-                    images = decode_payload(text)
-                except NotImplementedError:
-                    raise
-                except Exception:
-                    continue  # quarantine the corrupt turn
-                detected = [process_page(img) for img in images]
-                if hooks:
-                    detected = _apply_hooks(detected, hooks)
-                recs = []
-                for page_idx, page in enumerate(detected):
-                    img, orient, oconf, regions, tables, abs_boxes, rel, scores = page
-                    start = len(crops)
-                    crops.extend(np.ascontiguousarray(c) for c in extract_crops(img, abs_boxes))
-                    dims = (int(img.shape[0]), int(img.shape[1]))
-                    fields = (page_idx, dims, orient, float(oconf), regions, tables, rel, scores)
-                    recs.append((fields, start, len(crops)))
-                if recs:
-                    turns.append((conv_id, int(turn_idx), recs))
-                if len(crops) >= CROP_FLUSH:
-                    yield flush()
+        for conv_id, turn_idx, images in decoded_turns(batches):
+            detected = [process_page(img) for img in images]
+            if hooks:
+                detected = _apply_hooks(detected, hooks)
+            recs = []
+            for page_idx, page in enumerate(detected):
+                img, orient, oconf, regions, tables, abs_boxes, rel, scores = page
+                start = len(crops)
+                crops.extend(np.ascontiguousarray(c) for c in extract_crops(img, abs_boxes))
+                dims = (int(img.shape[0]), int(img.shape[1]))
+                fields = (page_idx, dims, orient, float(oconf), regions, tables, rel, scores)
+                recs.append((fields, start, len(crops)))
+            if recs:
+                turns.append((conv_id, turn_idx, recs))
+            if len(crops) >= CROP_FLUSH:
+                yield flush()
         if turns:
             yield flush()
 
@@ -190,19 +207,15 @@ def _apply_hooks(detected: list, hooks: Sequence[LocHook]) -> list:
     return out
 
 
-def extract_rows(
-    transcripts: DataFrame,
-    sink: Sink,
-    crop_partitions: int | None = None,
-    opts: KernelOptions = KernelOptions(),
-    hooks: Sequence[LocHook] = (),
-) -> DataFrame:
-    """Payload-turn source + the extraction kernel: the shared plan of every
-    extraction entry point.
+def payload_source(transcripts: DataFrame, num_partitions: int | None = None) -> DataFrame:
+    """The payload turns ``(conv_id, turn_idx, text)`` of ``transcripts``,
+    de-skewed by an ``xxhash64(conv_id, turn_idx)`` repartition: the input
+    of every payload-reading stage. The ``contains`` filter and the
+    projection push into the scan, so prose-only turns never reach Python.
 
-    ``crop_partitions=None`` leaves the partition count of the de-skew
-    exchange to AQE, which coalesces it by shuffle bytes towards one task
-    per core: every Python task pays a fixed worker setup cost
+    ``num_partitions=None`` leaves the partition count of the exchange to
+    AQE, which coalesces it by shuffle bytes towards one task per core:
+    every Python task pays a fixed worker setup cost
     (`tools/probe_task_overhead.py`) that more, smaller tasks multiply.
     AQE only merges partitions, so the stage runs at most
     ``spark.sql.shuffle.partitions`` tasks; `session.get_spark` defaults
@@ -211,8 +224,46 @@ def extract_rows(
         "conv_id", "turn_idx", "text"
     )
     key = F.xxhash64("conv_id", "turn_idx")
-    src = src.repartition(key) if crop_partitions is None else src.repartition(crop_partitions, key)
+    return src.repartition(key) if num_partitions is None else src.repartition(num_partitions, key)
+
+
+def extract_rows(
+    transcripts: DataFrame,
+    sink: Sink,
+    crop_partitions: int | None = None,
+    opts: KernelOptions = KernelOptions(),
+    hooks: Sequence[LocHook] = (),
+) -> DataFrame:
+    """Payload-turn source + the extraction kernel: the shared plan of every
+    extraction entry point. ``crop_partitions`` sizes the source exchange
+    (:func:`payload_source`; None: AQE-sized)."""
+    src = payload_source(transcripts, crop_partitions)
     return src.mapInPandas(make_kernel(sink, opts, hooks), schema=sink.schema)
+
+
+def map_pages(
+    transcripts: DataFrame, make_page_fn: Callable[[], Callable], schema: str
+) -> DataFrame:
+    """Payload-turn source + the decode loop + one page function: the plan
+    of the page queries that read decoded pages but no words (detections,
+    artefacts, layout regions, media metadata), so they pay for no
+    recognition. ``make_page_fn()`` runs once per task and returns
+    ``page_fn(img) -> rows``; every row comes out as ``(conv_id, turn_idx,
+    page_idx, *row)``, typed by ``schema``."""
+
+    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        page_fn = make_page_fn()
+        rows: list = []
+        for conv_id, turn_idx, pages in decoded_turns(batches):
+            for page_idx, img in enumerate(pages):
+                rows.extend((conv_id, turn_idx, page_idx, *row) for row in page_fn(img))
+            if len(rows) >= PAGE_ROW_FLUSH:
+                yield pd.DataFrame(rows)  # integer labels: columns bind by position
+                rows = []
+        if rows:
+            yield pd.DataFrame(rows)
+
+    return payload_source(transcripts).mapInPandas(fn, schema=schema)
 
 
 def _build(page: RecognizedPage, opts: KernelOptions) -> tuple[int, str, str]:

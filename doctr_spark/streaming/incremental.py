@@ -74,7 +74,8 @@ def completed_buckets(spark: SparkSession, manifest_dir: str) -> list[int]:
         if e.getCondition() == "PATH_NOT_FOUND":  # no manifest yet
             return []
         raise
-    return [r["bucket"] for r in m.where(F.col("status") == "done").select("bucket").distinct().collect()]
+    # a few rows per commit: dedupe on the driver, not with a shuffle
+    return sorted({r["bucket"] for r in m.where(F.col("status") == "done").select("bucket").collect()})
 
 
 def extract_bucketed(transcripts: DataFrame, n_buckets: int, buckets: list[int]) -> DataFrame:

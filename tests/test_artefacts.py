@@ -40,10 +40,9 @@ def test_label_filter_and_callable_facade():
 
 def test_artefact_rows_spark(spark):
     from doctr_spark.fixtures.artefacts import generate_artefact_transcripts
-    from doctr_spark.operators.decode import decode_pages
     from doctr_spark.operators.multimodal import artefact_rows
 
     tdf, gdf = generate_artefact_transcripts(spark, 6, with_gt=True)
-    got = {tuple(r) for r in artefact_rows(decode_pages(tdf)).collect()}
+    got = {tuple(r) for r in artefact_rows(tdf).collect()}
     exp = {tuple(r) for r in gdf.collect()}
     assert got == exp and len(got) > 0

@@ -13,14 +13,20 @@ prints the current digests.
 from __future__ import annotations
 
 import hashlib
+import inspect
 import json
+import pathlib
 
 import pytest
 
+from doctr_spark.operators.detect import detect_boxes
 from doctr_spark.operators.kie import kie_extract
-from doctr_spark.operators.pipeline import extract_documents, extract_pages
+from doctr_spark.operators.multimodal import artefact_rows, layout_region_rows, media_metadata
+from doctr_spark.operators.pipeline import decoded_turns, extract_documents, extract_pages
 
 ENTRY_POINTS = {"docs": extract_documents, "kie": kie_extract, "pages": extract_pages}
+# the page-level operators on the kernel's source and decode loop (`map_pages`)
+PAGE_OPERATORS = [detect_boxes, artefact_rows, layout_region_rows, media_metadata]
 
 # id -> (input, entry point, options, sha256 of the sorted output rows)
 CASES = {
@@ -220,6 +226,68 @@ def test_fused_quarantines_corrupt_payloads(spark):
     tdf = spark.createDataFrame(rows)
     for entry in ENTRY_POINTS.values():
         assert entry(tdf, crop_partitions=2).count() == 0, entry.__name__
+
+
+def test_page_operators_quarantine_corrupt_payloads(spark):
+    """The page operators share the kernel's decode loop: the corrupt turn
+    yields no row from any of them, and a good turn beside it still yields
+    its rows (a word, a photo, its layout regions, one metadata row)."""
+    import datetime as dt
+
+    import numpy as np
+
+    from doctr_spark.config import PAGE_H, PAGE_W
+    from doctr_spark.fixtures.payloads import make_img_payload
+    from doctr_spark.kernels.artefacts import draw_artefact
+    from doctr_spark.kernels.glyphs import draw_word
+
+    canvas = np.zeros((PAGE_H, PAGE_W), np.uint8)
+    draw_word(canvas, 32, 32, "hello")
+    draw_artefact(canvas, "photo", 100, 100, 80, 60)
+    ts = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
+    tdf = spark.createDataFrame(
+        [
+            ("c0", 0, "user", "<doc:img>not-base64!!</doc:img>", None, ts),
+            ("c0", 1, "user", "prose only", None, ts),
+            ("c1", 0, "user", make_img_payload(canvas), None, ts),
+        ],
+        "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
+    )
+    for op in PAGE_OPERATORS:
+        keys = {(r["conv_id"], r["turn_idx"]) for r in op(tdf).collect()}
+        assert keys == {("c1", 0)}, op.__name__
+
+
+def _plan_nodes(node):
+    """The physical plan's nodes, through AQE's wrapper."""
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    yield node
+    kids = node.children()
+    for i in range(kids.size()):
+        yield from _plan_nodes(kids.apply(i))
+
+
+@pytest.mark.parametrize("op", PAGE_OPERATORS, ids=lambda op: op.__name__)
+def test_page_operator_is_one_arrow_stage(inputs, op):
+    """A page operator is one `MapInPandas` over the kernel's AQE-sized
+    ``xxhash64(conv_id, turn_idx)`` exchange, and no page travels as a
+    binary column between stages."""
+    df = op(inputs("synthetic"))
+    plan = _plan(df)
+    above, exchange = plan.split("Exchange hashpartitioning(xxhash64(conv_id#", 1)
+    assert above.count("MapInPandas") == 1, plan
+    assert "REPARTITION_BY_COL" in exchange.splitlines()[0], plan
+    root = df._jdf.queryExecution().executedPlan()
+    schemas = [n.schema().simpleString() for n in _plan_nodes(root)]
+    assert not [s for s in schemas if ":binary" in s], schemas
+
+
+def test_decode_payload_has_one_call_site():
+    """Every payload query reads payloads through the one decode loop."""
+    ops = pathlib.Path(__file__).resolve().parents[1] / "doctr_spark" / "operators"
+    total = sum(p.read_text().count("decode_payload(") for p in ops.rglob("*.py"))
+    assert total == inspect.getsource(decoded_turns).count("decode_payload(") == 1
 
 
 if __name__ == "__main__":

@@ -80,7 +80,6 @@ def test_detect_stage_mask_region_labels(spark):
 
     from doctr_spark.fixtures.payloads import make_img_payload
     from doctr_spark.kernels.glyphs import draw_word
-    from doctr_spark.operators.decode import decode_pages
     from doctr_spark.operators.detect import detect_boxes
 
     img = np.zeros((256, 512), dtype=np.uint8)
@@ -90,9 +89,8 @@ def test_detect_stage_mask_region_labels(spark):
         [("c1", 0, "user", make_img_payload(img), None)],
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.current_timestamp())
-    pages = decode_pages(t, num_partitions=2)
-    all_words = detect_boxes(pages).where("word_idx >= 0").count()
-    kept = detect_boxes(pages, mask_region_labels=("page_header", "page_footer")).where(
+    all_words = detect_boxes(t).where("word_idx >= 0").count()
+    kept = detect_boxes(t, mask_region_labels=("page_header", "page_footer")).where(
         "word_idx >= 0"
     ).count()
     assert (all_words, kept) == (2, 1)
@@ -124,7 +122,6 @@ def test_mask_picture_regions_in_pipeline(spark):
     from doctr_spark.fixtures.payloads import make_img_payload
     from doctr_spark.kernels.artefacts import draw_artefact
     from doctr_spark.kernels.glyphs import draw_word
-    from doctr_spark.operators.decode import decode_pages
     from doctr_spark.operators.detect import detect_boxes
     from doctr_spark.operators.pipeline import extract_documents
 
@@ -135,7 +132,7 @@ def test_mask_picture_regions_in_pipeline(spark):
         [("c0", 0, "user", f"see {make_img_payload(canvas)}", None, dt.datetime(2024, 1, 1))],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    boxes = detect_boxes(decode_pages(tdf), mask_region_labels=("picture",))
+    boxes = detect_boxes(tdf, mask_region_labels=("picture",))
     assert boxes.where("word_idx >= 0").count() == 1  # only the word detected
     row = extract_documents(tdf, mask_region_labels=("picture",), crop_partitions=2).first()
     assert row["extracted_text"] == "hello" and row["n_words"] == 1

@@ -5,7 +5,6 @@ from doctr_spark.fixtures.layout import layout_paragraphs
 from doctr_spark.fixtures.transcripts import generate_transcripts
 from doctr_spark.kernels.features import N_FEATURES, extract_features
 from doctr_spark.kernels.imgcodec import encode_page
-from doctr_spark.operators.decode import decode_pages
 from doctr_spark.operators.multimodal import decode_media, media_metadata
 
 
@@ -39,40 +38,11 @@ def test_extract_features_deterministic():
     assert f1.sum() > 0  # ink present
 
 
-def test_resize_media_kernel():
-    from doctr_spark.operators.multimodal import resize_media
-
-    img = layout_paragraphs([["hello", "world"]])[0].canvas
-    out = resize_media(img, 64, 128)
-    assert out.shape == (64, 128)
-    assert out.sum() > 0  # ink survives
-    # identity resize is exact
-    assert (resize_media(img, *img.shape) == img).all()
-    # 2x upscale then exact downsample returns the original (NN round trip)
-    up = resize_media(img, img.shape[0] * 2, img.shape[1] * 2)
-    assert (resize_media(up, *img.shape) == img).all()
-
-
-def test_media_resize_and_frame_sample_spark(spark):
-    from doctr_spark.operators.multimodal import media_frame_sample, media_resize
-
-    tdf = generate_transcripts(spark, 10)
-    pages = decode_pages(tdf)
-    resized = media_resize(pages, 64, 128).collect()
-    assert len(resized) > 0
-    for r in resized:
-        assert r["height"] == 64 and r["width"] == 128
-        assert decode_media(bytes(r["page"]), "page").shape == (64, 128)
-    sampled = media_frame_sample(pages, every_k=2)
-    assert sampled.where("page_idx % 2 != 0").count() == 0
-    assert sampled.count() == pages.where("page_idx % 2 = 0").count()
-
-
 def test_media_metadata_spark(spark):
     import json
 
     tdf, mdf = generate_transcripts(spark, 10, with_media=True)
-    meta = media_metadata(decode_pages(tdf)).collect()
+    meta = media_metadata(tdf).collect()
     assert len(meta) > 0
     for r in meta:
         assert r["media_kind"] == "page"

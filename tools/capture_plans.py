@@ -17,6 +17,13 @@ OUT_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 # the five bench queries by default
 DEFAULT = ["q1_ocr_documents", "q2_ocr_synthetic", "q3_dedup_minhash_lsh", "q4_similarity_topk", "q5_dedup_simhash"]
 
+# capture name -> declared query builder in __spark_entry__
+ENTRY_QUERIES = {
+    "map_two_level": "metric_object_detection_map",
+    "ocr_artefacts": "ocr_artefacts",
+    "metric_localization": "metric_localization",
+}
+
 
 def build(name, spark):
     from doctr_spark.fixtures.transcripts import generate_transcripts
@@ -36,10 +43,10 @@ def build(name, spark):
         return dedup.simhash(spark, SF_DIR)
     if name == "dedup_minhash":
         return dedup.minhash_signatures(spark, SF_DIR)
-    if name == "map_two_level":
+    if name in ENTRY_QUERIES:
         import __spark_entry__ as entry
 
-        return entry.metric_object_detection_map(spark, SF_DIR)
+        return getattr(entry, ENTRY_QUERIES[name])(spark, SF_DIR)
     raise SystemExit(f"unknown query {name}")
 
 

@@ -31,7 +31,6 @@ def evaluate(spark: SparkSession, img_folder: str, label_file: str) -> dict:
     import os
 
     from doctr_spark.io.datasets import load_ocr_dataset
-    from doctr_spark.operators.decode import decode_pages
     from doctr_spark.operators.detect import detect_boxes
     from doctr_spark.operators.metrics import localization_per_page
     from doctr_spark.operators.pipeline import extract_documents
@@ -82,7 +81,7 @@ def evaluate(spark: SparkSession, img_folder: str, label_file: str) -> dict:
 
     # detection rows carry relative boxes + page dims; GT geometry is absolute
     preds = (
-        detect_boxes(decode_pages(tdf))
+        detect_boxes(tdf)
         .where(F.col("word_idx") >= 0)
         .groupBy("conv_id")
         .agg(
