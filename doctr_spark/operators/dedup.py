@@ -15,12 +15,15 @@ a key-partitioned aggregation — linear shuffles on (doc, seed) or
 (shingle) keys with map-side partial aggregation; the LSH band join
 replaces the O(n^2) pair scan with an equi-join on band keys, which is the
 standard web-scale near-dup design (MinHashLSH as in Spark MLlib, built
-here from first principles).
+here from first principles). The pair lists are lazy plans: the bucket and
+stop-shingle caps are ``count(*)`` windows whose exchange the following
+self-join reuses, so nothing is cached or collected to the driver before
+the caller's one action.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F  # noqa: N812
 
 N_MINHASH = 8  # seeds
@@ -93,32 +96,48 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str, max_bucket: int = MAX_BUCKET) -> DataFrame:
+def band_pairs(bands: DataFrame, id_col: str, key_col: str) -> DataFrame:
+    """LSH candidate pairs off a ``(id_col, band, key_col)`` band table: the
+    ids sharing a ``(band, key_col)`` bucket of 2..``MAX_BUCKET`` members,
+    as ``(<stem>_a, <stem>_b)`` with ``a < b`` and no repeats (``stem`` is
+    ``id_col`` without ``_id``: ``doc_id`` gives ``doc_a, doc_b``).
+
+    The bucket size is a ``count(*)`` window over ``(band, key_col)``, so
+    the cap (SparkER's block purging) is a filter inside the plan, and the
+    self-join on the same keys reuses the window's exchange: the band
+    table's subtree runs once, with no cache and no driver-side key set.
+    The ``merge`` hint keeps the join on the window's partitioning and
+    order; a small size estimate would otherwise broadcast a whole side.
+    """
+    stem = id_col.removesuffix("_id")
+    n = F.count("*").over(Window.partitionBy("band", key_col))
+    cand = bands.withColumn("n", n).where(F.col("n").between(2, MAX_BUCKET))
+    a = cand.select("band", key_col, F.col(id_col).alias(f"{stem}_a"))
+    b = cand.select("band", key_col, F.col(id_col).alias(f"{stem}_b"))
+    return (
+        a.hint("merge").join(b, ["band", key_col])
+        .where(F.col(f"{stem}_a") < F.col(f"{stem}_b"))
+        .select(f"{stem}_a", f"{stem}_b")
+        .distinct()
+    )
+
+
+def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate near-dup pairs: docs agreeing on all signatures in a band.
 
     band id = seed div (N_MINHASH / LSH_BANDS); band key = concatenated
-    signature values. Physical design for 100 TB:
+    signature values, sliced straight off the wide signature row (no
+    second shuffle to assemble bands). :func:`band_pairs` drops singleton
+    and larger-than-``MAX_BUCKET`` buckets before pair expansion, so no
+    task expands a boilerplate cluster's O(n^2) pairs, and returns a lazy
+    plan that runs in the caller's one action.
 
-    * the band table is materialized (eager persist; at cluster scale:
-      written to a staging path) so the shingle-explode + md5 subtree is
-      computed exactly once even though three consumers read it — bucket
-      sizing and both sides of the self-join. Round 1 replaced the persist
-      with a per-bucket ``collect_list`` pair expansion, which put whole
-      duplicate clusters into single rows (hot-key OOM) and regressed 3.3x
-      in the driver bench; this restores the materialize-then-equi-join
-      plan. The persist is eager (a count() action) because independent
-      downstream stages start concurrently and would otherwise race to
-      compute the same uncached subtree several times.
-    * buckets larger than ``max_bucket`` are dropped BEFORE pair expansion
-      (semi-join on eligible keys), so no task ever sees O(n^2) of a
-      boilerplate cluster. Singleton buckets are pruned by the same pass.
-    * band keys come straight off the wide signature row (array slice +
-      posexplode) — no second shuffle to assemble bands.
-
-    Returns a PERSISTED (eagerly materialized) DataFrame: the pair list is
-    small and read by several consumers. Callers that keep the session
-    alive should ``unpersist()`` it after consumption (``dedup_clusters``
-    does); the oracle/bench harnesses clear the cache between queries.
+    Skew: the bucket count is a window, so all rows of a hot bucket reach
+    one task, where a spillable count drops them (linear work). A
+    map-side-combined count with a broadcast eligible-key set would spread
+    that count, but costs two eager jobs and a driver-held key set; see
+    "CPU and GPU Hash Joins on Skewed Data" (ICDE 2024) for the skewed
+    band self-join.
     """
     wide = _doc_signatures(spark, sf_dir)
     per_seed = N_MINHASH // LSH_BANDS
@@ -126,32 +145,8 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str, max_bucket: int = MAX_BU
         F.concat_ws(",", F.array_sort(F.array(*[f"m{b * per_seed + i}" for i in range(per_seed)])))
         for b in range(LSH_BANDS)
     ]
-    bands = wide.select(
-        "doc_id", F.posexplode(F.array(*band_keys)).alias("band", "band_key")
-    ).persist()
-    bands.count()  # eager: materialize once before concurrent consumers
-    # non-singleton buckets are a tiny fraction of docs (duplicate clusters
-    # only), so the eligibility filter broadcasts; at petabyte scale swap
-    # the hint for a shuffled semi-join — the shape stays an equi-join.
-    eligible = F.broadcast(
-        bands.groupBy("band", "band_key")
-        .agg(F.count("*").alias("n"))
-        .where((F.col("n") >= 2) & (F.col("n") <= max_bucket))
-        .select("band", "band_key")
-    )
-    cand = bands.join(eligible, ["band", "band_key"])
-    a = cand.select("band", "band_key", F.col("doc_id").alias("doc_a"))
-    b = cand.select("band", "band_key", F.col("doc_id").alias("doc_b"))
-    result = (
-        a.join(b, ["band", "band_key"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-        .persist()
-    )
-    result.count()  # materialize the (small) pair list, then free the band table
-    bands.unpersist()
-    return result
+    bands = wide.select("doc_id", F.posexplode(F.array(*band_keys)).alias("band", "band_key"))
+    return band_pairs(bands, "doc_id", "band_key")
 
 
 def connected_components(pairs: DataFrame, max_iters: int = 30) -> tuple[DataFrame, int]:
@@ -180,15 +175,12 @@ def connected_components(pairs: DataFrame, max_iters: int = 30) -> tuple[DataFra
 
     Returns ``(labels, rounds)``: every node that appears in a pair, labeled
     with its component-minimum id, and the number of rounds executed.
+    ``labels`` is a lazy join of the first and last edge checkpoints.
     """
-    nodes = (
-        pairs.select(F.col("doc_a").alias("doc_id"))
-        .union(pairs.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-        .persist()
-    )
-    # canonical orientation u > v (small-star's input invariant)
+    # canonical orientation u > v (small-star's input invariant); the first
+    # checkpoint also computes a lazy pair list exactly once
     edges = pairs.select(F.col("doc_b").alias("u"), F.col("doc_a").alias("v")).localCheckpoint()
+    nodes = edges.select(F.col("u").alias("doc_id")).union(edges.select("v")).distinct()
     prev_sum: tuple | None = None
     rounds = 0
     for _ in range(max_iters):
@@ -224,16 +216,12 @@ def connected_components(pairs: DataFrame, max_iters: int = 30) -> tuple[DataFra
             break
         prev_sum = checksum
     # at convergence the edge set is a union of min-rooted stars
-    labels = (
-        nodes.join(edges.select(F.col("u").alias("doc_id"), F.col("v").alias("root")), "doc_id", "left")
-        .select(
-            F.col("doc_id").cast("long").alias("doc_id"),
-            F.coalesce(F.col("root"), F.col("doc_id")).cast("long").alias("cluster_id"),
-        )
-        .persist()
+    labels = nodes.join(
+        edges.select(F.col("u").alias("doc_id"), F.col("v").alias("root")), "doc_id", "left"
+    ).select(
+        F.col("doc_id").cast("long").alias("doc_id"),
+        F.coalesce(F.col("root"), F.col("doc_id")).cast("long").alias("cluster_id"),
     )
-    labels.count()
-    nodes.unpersist()
     return labels, rounds
 
 
@@ -244,9 +232,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str, max_iters: int = 30) -> Dat
     real dedup pass acts on. See :func:`connected_components` for the
     O(log n)-round star algorithm.
     """
-    pairs = minhash_lsh_pairs(spark, sf_dir)
-    labels, _ = connected_components(pairs, max_iters=max_iters)
-    pairs.unpersist()
+    labels, _ = connected_components(minhash_lsh_pairs(spark, sf_dir), max_iters=max_iters)
     return labels
 
 
@@ -281,39 +267,29 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return votes.select("doc_id", word.cast("long").alias("simhash"))
 
 
-def ngram_jaccard_pairs(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = 0.5,
-    df_cap: int = SHINGLE_DF_CAP,
-) -> DataFrame:
-    """Exact n-gram Jaccard >= threshold pairs, candidate-generated through
-    the shared-shingle equi-join (set semantics on distinct shingles).
+def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard >= 0.5 pairs, candidate-generated through the
+    shared-shingle equi-join (set semantics on distinct shingles).
 
-    Stop-shingles (document frequency > ``df_cap``) are excluded: at web
-    scale a shingle like "of the and" fans the equi-join out quadratically.
-    The metric is exact Jaccard over the non-stop shingle space (both the
-    intersection and the set sizes use the capped sets), so the number is
-    self-consistent and both engines agree; stop-shingles carry no
-    near-duplicate signal to begin with.
+    Stop-shingles (document frequency > ``SHINGLE_DF_CAP``) are excluded:
+    at web scale a shingle like "of the and" fans the equi-join out
+    quadratically. The metric is exact Jaccard over the non-stop shingle
+    space (both the intersection and the set sizes use the capped sets),
+    so the number is self-consistent and both engines agree; stop-shingles
+    carry no near-duplicate signal to begin with.
 
-    Returns a PERSISTED (eagerly materialized) DataFrame — same caller
-    contract as :func:`minhash_lsh_pairs`.
+    The document frequency is a ``count(*)`` window over ``shingle``, so
+    the shingle self-join (a merge join, as in :func:`band_pairs`) reuses
+    the window's exchange and the shingle subtree runs once in the
+    caller's one action, with no cache.
     """
-    sh = _shingles(_docs(spark, sf_dir)).distinct().persist()
-    sh.count()  # eager: df-cap scan + key join would race the cache
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .where(F.col("df") <= df_cap)
-        .select("shingle")
-    )
-    keyed = sh.join(rare, "shingle").persist()
-    keyed.count()  # eager: sizes + both self-join sides read it
+    sh = _shingles(_docs(spark, sf_dir)).distinct()
+    df = F.count("*").over(Window.partitionBy("shingle"))
+    keyed = sh.withColumn("df", df).where(F.col("df") <= SHINGLE_DF_CAP).select("doc_id", "shingle")
     sizes = keyed.groupBy("doc_id").agg(F.count("*").alias("n"))
     a, b = keyed.alias("a"), keyed.alias("b")
     inter = (
-        a.join(b, F.col("a.shingle") == F.col("b.shingle"))
+        a.hint("merge").join(b, F.col("a.shingle") == F.col("b.shingle"))
         .where(F.col("a.doc_id") < F.col("b.doc_id"))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("inter"))
@@ -323,18 +299,13 @@ def ngram_jaccard_pairs(
     # post-candidate-generation, so the shuffled equi-join on doc ids is
     # cheap (AQE will in fact broadcast the *inter* side when it is small
     # enough — the safe direction).
-    result = (
+    return (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
         .withColumn("jaccard", F.round(F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6))
-        .where(F.col("jaccard") >= threshold)
+        .where(F.col("jaccard") >= 0.5)
         .select("doc_a", "doc_b", "jaccard")
-        .persist()
     )
-    result.count()  # materialize the small pair list, then free the shingle caches
-    keyed.unpersist()
-    sh.unpersist()
-    return result
 
 
 _SHINGLE_CTE = """

@@ -11,10 +11,10 @@
   candidates are pairs sharing ANY band bucket — the union of b equi-joins,
   expressed as one equi-join on the exploded (band, key) table. Versus the
   round-1 single 8-bit probe this multiplies recall (1-(1-p^r)^b vs p^8)
-  and splits hot buckets across bands. Buckets larger than `MAX_BUCKET`
-  are dropped before pair expansion so no task ever sees a quadratic
-  blow-up; the band table carries ids only (embeddings are re-joined after
-  the DISTINCT candidate set), keeping the shuffled rows narrow at scale.
+  and splits hot buckets across bands. `dedup.band_pairs` drops buckets
+  larger than `MAX_BUCKET` before pair expansion (no quadratic blow-up);
+  the band table carries ids only (embeddings are re-joined after the
+  DISTINCT candidate set), keeping the shuffled rows narrow at scale.
 """
 
 from __future__ import annotations
@@ -22,12 +22,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F  # noqa: N812
 
+from .dedup import MAX_BUCKET, band_pairs, connected_components
+
 N_QUERIES = 5
 TOP_K = 10
 NEAR_DUP_BANDS = 8  # bands ...
 NEAR_DUP_BITS = 8  # ... of sign bits each: 8 x 8 covers all 64 dims
 NEAR_DUP_COS = 0.4
-MAX_BUCKET = 256
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,45 +125,19 @@ def lsh_bucket_ann(spark: SparkSession, sf_dir: str, n_queries: int = N_QUERIES,
     )
 
 
-def embedding_near_dups(
-    spark: SparkSession,
-    sf_dir: str,
-    threshold: float = NEAR_DUP_COS,
-    max_bucket: int = MAX_BUCKET,
-) -> DataFrame:
-    """Near-duplicate vector pairs (cos >= threshold) via banded multi-probe
-    sign LSH: only equi-joins on (band, key); oversized buckets skipped.
-
-    Returns a PERSISTED (eagerly materialized) DataFrame — callers keeping
-    the session alive should ``unpersist()`` after consumption; the
-    oracle/bench harnesses clear the cache between queries."""
+def embedding_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate vector pairs (cos >= ``NEAR_DUP_COS``) via banded
+    multi-probe sign LSH: only equi-joins on (band, key); oversized buckets
+    skipped (:func:`dedup.band_pairs`). A lazy plan: a caller that reads
+    the pair list twice checkpoints it itself (:func:`near_dup_report`)."""
     emb = _emb(spark, sf_dir)
-    banded = _banded(emb).persist()
-    banded.count()  # eager: independent downstream stages would race the cache
-    eligible = F.broadcast(
-        banded.groupBy("band", "bkey")
-        .agg(F.count("*").alias("n"))
-        .where((F.col("n") >= 2) & (F.col("n") <= max_bucket))
-        .select("band", "bkey")
-    )
-    cand = banded.join(eligible, ["band", "bkey"])
-    pairs = (
-        cand.select("band", "bkey", F.col("vec_id").alias("vec_a"))
-        .join(cand.select("band", "bkey", F.col("vec_id").alias("vec_b")), ["band", "bkey"])
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b")
-        .distinct()
-    )
-    result = (
+    pairs = band_pairs(_banded(emb), "vec_id", "bkey")
+    return (
         pairs.join(emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("ea")), "vec_a")
         .join(emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("eb")), "vec_b")
         .select("vec_a", "vec_b", cosine(F.col("ea"), F.col("eb")).alias("cos"))
-        .where(F.col("cos") >= threshold)
-        .persist()
+        .where(F.col("cos") >= NEAR_DUP_COS)
     )
-    result.count()  # materialize the small pair list, then free the band table
-    banded.unpersist()
-    return result
 
 
 IVF_MOD = 40  # deterministic centroid sampling: vec_id % IVF_MOD == IVF_OFFSET
@@ -409,12 +384,9 @@ def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reuses the O(log n)-round large-star/small-star kernel
     (`operators.dedup.connected_components`), so the clustering holds at
     corpus scale regardless of component shape."""
-    from .dedup import connected_components
-
     pairs = embedding_near_dups(spark, sf_dir)
     edges = pairs.select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
     labels, _ = connected_components(edges)
-    pairs.unpersist()
     return labels.select(
         F.col("doc_id").alias("vec_id"), F.col("cluster_id").alias("cluster_id")
     )
@@ -426,13 +398,8 @@ def near_dup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     cosine pair list (:func:`embedding_near_dups`) is computed ONCE, then
     both the pair rows and the large-star/small-star component labels
     derived from it are union-tagged into a common (kind, id_a, id_b, cos)
-    schema.
-
-    Returns a DataFrame over a PERSISTED pair list — the oracle/bench
-    harnesses clear the cache between queries."""
-    from .dedup import connected_components
-
-    pairs = embedding_near_dups(spark, sf_dir)
+    schema. The pair list feeds both, so it is checkpointed here, once."""
+    pairs = embedding_near_dups(spark, sf_dir).localCheckpoint()
     edges = pairs.select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
     labels, _ = connected_components(edges)
     p = pairs.select(

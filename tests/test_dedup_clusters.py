@@ -26,7 +26,6 @@ def test_path_graph_converges_logarithmically(spark):
     labels, rounds = connected_components(pairs)
     assert _labels(labels) == {i: 0 for i in range(n)}
     assert rounds <= math.ceil(math.log2(n)) + 1  # 7 for n=50
-    labels.unpersist()
 
 
 def test_two_components_and_clique(spark):
@@ -41,7 +40,6 @@ def test_two_components_and_clique(spark):
         10: 10, 11: 10, 12: 10, 13: 10,
         20: 20, 21: 20,
     }
-    labels.unpersist()
 
 
 def test_empty_pairs(spark):
@@ -49,7 +47,6 @@ def test_empty_pairs(spark):
     labels, rounds = connected_components(pairs)
     assert labels.count() == 0
     assert rounds <= 2
-    labels.unpersist()
 
 
 def test_star_already(spark):
@@ -57,4 +54,3 @@ def test_star_already(spark):
     labels, rounds = connected_components(pairs)
     assert _labels(labels) == {i: 0 for i in range(8)}
     assert rounds <= 3
-    labels.unpersist()

@@ -1,13 +1,15 @@
 """Capture .explain('formatted') for the bench queries (and other declared
-queries on request) into plans/r07/<name>_{before,after}.txt.
+queries on request) into plans/r07/<name>_<stage>.txt. Capturing runs no
+query: declared queries are built with their expectation write stubbed out.
 
-Usage: python tools/capture_plans.py before|after [query ...]
+Usage: python tools/capture_plans.py <stage, e.g. before|after> [query ...]
 """
 
 from __future__ import annotations
 
 import os
 import sys
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -43,11 +45,22 @@ def build(name, spark):
         return dedup.simhash(spark, SF_DIR)
     if name == "dedup_minhash":
         return dedup.minhash_signatures(spark, SF_DIR)
+    if name == "ngram_jaccard":
+        return dedup.ngram_jaccard_pairs(spark, SF_DIR)
+    if name == "near_dup_pairs":
+        return similarity.embedding_near_dups(spark, SF_DIR)
     if name in ENTRY_QUERIES:
         import __spark_entry__ as entry
 
-        return getattr(entry, ENTRY_QUERIES[name])(spark, SF_DIR)
+        # the expectation parquet is for the oracle check, not the plan
+        with mock.patch.object(entry, "_stage_expectation", lambda df, n: f"{entry.ORACLE_SCRATCH}/{n}"):
+            return getattr(entry, ENTRY_QUERIES[name])(spark, SF_DIR)
     raise SystemExit(f"unknown query {name}")
+
+
+def explain(name, spark) -> str:
+    df = build(name, spark)
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
 
 
 def main():
@@ -59,8 +72,7 @@ def main():
     spark = get_spark(master="local[8]", app_name="capture_plans", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     for name in names:
-        df = build(name, spark)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        plan = explain(name, spark)
         path = os.path.join(OUT_DIR, f"{name}_{stage}.txt")
         with open(path, "w") as f:
             f.write(plan)

@@ -75,9 +75,9 @@ def main(sf_dir: str, only: list[str] | None = None) -> int:
             failures += 1
         else:
             print(f"MATCH {name}: {len(sdf)} rows")
-        # some operators return eagerly-persisted results (documented
-        # contract: pair-list queries materialize before returning) — clear
-        # between queries so one query's cache never lingers into the next
+        # text_pack_sequences returns an eagerly persisted result (its
+        # range-partition guard) — clear between queries so one query's
+        # cache never lingers into the next
         spark.catalog.clearCache()
     spark.stop()
     return failures
