@@ -22,16 +22,6 @@ def clean_tokens(col):
     return F.trim(F.regexp_replace(F.regexp_replace(F.lower(col), "[^a-z0-9 ]", " "), " +", " "))
 
 
-def shuffle_partitions(spark: SparkSession) -> int:
-    """``spark.sql.shuffle.partitions`` as a count. A value that is not a
-    number (``auto`` on some managed platforms) or a missing one falls back
-    to ``defaultParallelism``."""
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
-
-
 def scan_parallel(df: DataFrame, *keys) -> DataFrame:
     """Input-parallelism guard for small or unsplittable scans (guide
     §2.5, "input skew"): a table that fits one file split would otherwise
@@ -43,20 +33,20 @@ def scan_parallel(df: DataFrame, *keys) -> DataFrame:
     is the identity, so no shuffle is ever added to a large input.
 
     ``keys``: when the consumer aggregates by a key, pass it — the
-    repartition then hashes on that key with ``spark.sql.shuffle.
-    partitions`` partitions, so the downstream groupBy REUSES this
-    exchange (guide §2.4: repartition(k) + groupBy(k) share one shuffle)
-    and the per-key compute runs parallel with ZERO additional exchanges.
-    Without keys, a round-robin spread (right for map-only consumers).
+    repartition then hashes on that key, by column, so the downstream
+    groupBy REUSES this exchange (guide §2.4: repartition(k) + groupBy(k)
+    share one shuffle), the per-key compute runs parallel with ZERO
+    additional exchanges, and AQE sizes its task count as it sizes the
+    extraction exchange (`pipeline.payload_source`). Without keys, a
+    round-robin spread over the cores (right for map-only consumers).
 
     Results are unaffected: every consumer is a projection, aggregation
     or join, none of which depend on row placement."""
-    spark = df.sparkSession
-    p = spark.sparkContext.defaultParallelism
+    p = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= p:
         return df
     if keys:
-        return df.repartition(shuffle_partitions(spark), *keys)
+        return df.repartition(*keys)
     return df.repartition(p)
 
 

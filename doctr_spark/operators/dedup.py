@@ -281,9 +281,11 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     The document frequency is a ``count(*)`` window over ``shingle``, so
     the shingle self-join (a merge join, as in :func:`band_pairs`) reuses
     the window's exchange and the shingle subtree runs once in the
-    caller's one action, with no cache.
+    caller's one action, with no cache. The scan guard is keyed on
+    ``doc_id``: its exchange already satisfies the ``(doc_id, shingle)``
+    distinct, so a one-split input pays no extra round-robin shuffle.
     """
-    sh = _shingles(_docs(spark, sf_dir)).distinct()
+    sh = _shingles(_docs(spark, sf_dir, "doc_id")).distinct()
     df = F.count("*").over(Window.partitionBy("shingle"))
     keyed = sh.withColumn("df", df).where(F.col("df") <= SHINGLE_DF_CAP).select("doc_id", "shingle")
     sizes = keyed.groupBy("doc_id").agg(F.count("*").alias("n"))
@@ -294,11 +296,11 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .agg(F.count("*").alias("inter"))
     )
-    # `sizes` is one row PER DOCUMENT — at corpus scale that is billions of
-    # rows, so it must never be a broadcast build side. `inter` is tiny
-    # post-candidate-generation, so the shuffled equi-join on doc ids is
-    # cheap (AQE will in fact broadcast the *inter* side when it is small
-    # enough — the safe direction).
+    # `sizes` is one row PER DOCUMENT. Only the 16 MB
+    # autoBroadcastJoinThreshold (`session.get_spark`) keeps it off the
+    # broadcast side at corpus scale; on small inputs (sf0.1) the planner
+    # does broadcast it on both size joins, which is cheap there. `inter` is
+    # tiny post-candidate-generation, so either join direction is cheap.
     return (
         inter.join(sizes.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
         .join(sizes.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")

@@ -40,12 +40,10 @@ KIE_SINK = Sink(
 )
 
 
-def kie_extract(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
+def kie_extract(transcripts: DataFrame) -> DataFrame:
     """KIE pipeline -> one row per page with per-class predictions: the
-    extraction kernel (`operators.pipeline`) with the KIE sink.
-    ``crop_partitions`` as in `operators.pipeline.extract_rows` (None:
-    AQE-sized)."""
-    return extract_rows(transcripts, KIE_SINK, crop_partitions)
+    extraction kernel (`operators.pipeline`) with the KIE sink."""
+    return extract_rows(transcripts, KIE_SINK)
 
 
 def kie_class_counts(kie_pages: DataFrame) -> DataFrame:

@@ -229,111 +229,10 @@ def detection_metric_per_page(
 _MAP_DET_SCHEMA = "cls long, thresh double, score double, tp int"
 
 
-def _two_level_pr(det: DataFrame, totals: DataFrame) -> DataFrame:
-    """Distributed PR-curve construction without the per-(class,
-    threshold) single-window funnel — the PLANS.md escape hatch for
-    10^9-detection classes, as real code.
-
-    A bare ``Window.partitionBy(cls, thresh).orderBy(score)`` funnels
-    every detection of one class through ONE sort task. Here instead:
-
-    1. range-repartition on (cls, thresh, -score) — each window group is
-       split across K ordered partitions, each bounded at N/K rows;
-    2. collect ONE row per (partition, cls, thresh): its tp sum and row
-       count; prefix-sum them per group on the driver and broadcast the
-       base offsets back (the same distributed prefix sum
-       ``text_pack_sequences`` uses);
-    3. per-partition windows give the local cumsums; base + local is the
-       global PR point. The reverse running max (interpolated precision)
-       folds the same way: a local suffix max plus the broadcast max of
-       all LATER partitions of the group. The previous row's recall at a
-       partition's first row is just base_tp/total_gt.
-    """
-    from pyspark.sql.window import Window
-
-    spark = det.sparkSession
-    k_parts = max(spark.sparkContext.defaultParallelism, 8)
-    # localCheckpoint (eager), NOT a best-effort persist: the three jobs
-    # below (base-offset collect, suffix-max collect, final plan) all
-    # assume the spark_partition_id() column matches the data placement.
-    # A persist could silently recompute after cache eviction with a
-    # RE-SAMPLED RangePartitioner, misaligning the broadcast base offsets
-    # (wrong mAP, no error); the checkpoint truncates lineage, so the
-    # partition ids are baked into materialized rows and a lost block
-    # fails loudly instead. On a real cluster swap in reliable
-    # ``checkpoint()`` for executor-loss tolerance. Blocks are released
-    # by the ContextCleaner once the result plan is dropped.
-    parts = (
-        det.withColumn("nscore", -F.col("score"))
-        .repartitionByRange(k_parts, "cls", "thresh", "nscore")
-        .withColumn("part", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    agg = (
-        parts.groupBy("part", "cls", "thresh")
-        .agg(F.sum("tp").alias("t"), F.count("*").alias("n"))
-        .collect()
-    )
-    base_rows, running = [], {}
-    for r in sorted(agg, key=lambda r: (r["cls"], r["thresh"], r["part"])):
-        key = (r["cls"], r["thresh"])
-        bt, bk = running.get(key, (0, 0))
-        base_rows.append((r["part"], r["cls"], r["thresh"], bt, bk))
-        running[key] = (bt + int(r["t"]), bk + int(r["n"]))
-    base_df = local_frame(
-        spark, base_rows, "part int, cls long, thresh double, base_tp long, base_k long"
-    )
-    grp = ["part", "cls", "thresh"]
-    wl_row = Window.partitionBy(*grp).orderBy("nscore")
-    wl = wl_row.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wl_rev = wl_row.rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    loc = (
-        parts.join(F.broadcast(base_df), grp)
-        .join(totals, "cls")
-        .withColumn("tp_cum", F.col("base_tp") + F.sum("tp").over(wl))
-        .withColumn("k", F.col("base_k") + F.row_number().over(wl_row))
-        .withColumn("recall", F.col("tp_cum") / F.col("total_gt"))
-        .withColumn("precision", F.col("tp_cum") / F.col("k"))
-        .withColumn("local_suffix_max", F.max("precision").over(wl_rev))
-        .withColumn(
-            "prev_recall",
-            F.coalesce(
-                F.lag("recall").over(wl_row),
-                F.when(F.col("base_k") == 0, F.lit(-0.01)).otherwise(
-                    F.col("base_tp") / F.col("total_gt")
-                ),
-            ),
-        )
-    )
-    pmax = (
-        loc.groupBy(*grp).agg(F.max("precision").alias("pmax")).collect()
-    )
-    later_rows, suffix = [], {}
-    for r in sorted(pmax, key=lambda r: (r["cls"], r["thresh"], -r["part"])):
-        key = (r["cls"], r["thresh"])
-        later_rows.append((r["part"], r["cls"], r["thresh"], suffix.get(key, 0.0)))
-        suffix[key] = max(suffix.get(key, 0.0), float(r["pmax"]))
-    later_df = local_frame(
-        spark, later_rows, "part int, cls long, thresh double, later_max double"
-    )
-    return loc.join(F.broadcast(later_df), grp).withColumn(
-        "p_interp", F.greatest("local_suffix_max", "later_max")
-    )
-
-
-# auto-switch point for the distributed two-level PR fold: below this many
-# (detection x threshold) rows the single-window PR is faster (fewer jobs,
-# no collects); above it the per-(cls,thresh) window would funnel huge
-# classes through one sort task. ~2M rows sort in about a second in one
-# task, well inside straggler tolerance; 10^9-detection classes switch.
-TWO_LEVEL_PR_AUTO_ROWS = 2_000_000
-
-
 def object_detection_map(
     pairs: DataFrame,
     iou_thresholds: list[float] | None = None,
     use_polygons: bool = False,
-    two_level_pr: bool | None = None,
 ) -> DataFrame:
     """Reference ``ObjectDetectionMetric`` (COCO-style mAP@[.5:.95],
     `doctr/utils/metrics.py:638-884`) re-expressed Spark-first.
@@ -357,12 +256,10 @@ def object_detection_map(
     ``pred_boxes``/``pred_labels``/``pred_scores``. Returns one row per
     IoU threshold with the class-mean AP; mAP@[.5:.95] is their mean.
 
-    ``two_level_pr=None`` (the default) AUTO-selects the PR construction:
-    one cheap aggregate over ``pairs`` counts predictions, and above
-    ``TWO_LEVEL_PR_AUTO_ROWS`` (detection x threshold) rows the
-    distributed two-level fold replaces the per-(cls,thresh) single-task
-    window. Both produce identical results (parity-tested,
-    tests/test_metrics_spark.py).
+    Each (class, threshold) PR curve is one window partition, so one task
+    sorts all of a class's detections at that threshold. PLANS.md keeps
+    the design of a distributed two-level fold for classes too large for
+    one sort task; no declared input comes near that size.
     """
     import numpy as np
     from pyspark.sql.window import Window
@@ -419,33 +316,18 @@ def object_detection_map(
         .agg(F.count("*").cast("double").alias("total_gt"))
     )
 
-    if two_level_pr is None:
-        n_preds = pairs.select(F.sum(F.size("pred_boxes"))).first()[0] or 0
-        two_level_pr = n_preds * len(thresholds) > TWO_LEVEL_PR_AUTO_ROWS
-
-    if two_level_pr:
-        pr = _two_level_pr(det, totals)
-    else:
-        w = (
-            Window.partitionBy("cls", "thresh")
-            .orderBy(F.desc("score"))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        w_rev = (
-            Window.partitionBy("cls", "thresh")
-            .orderBy(F.desc("score"))
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        w_lag = Window.partitionBy("cls", "thresh").orderBy(F.desc("score"))
-        pr = (
-            det.join(totals, "cls")
-            .withColumn("tp_cum", F.sum("tp").over(w))
-            .withColumn("k", F.row_number().over(w_lag))
-            .withColumn("recall", F.col("tp_cum") / F.col("total_gt"))
-            .withColumn("precision", F.col("tp_cum") / F.col("k"))
-            .withColumn("p_interp", F.max("precision").over(w_rev))
-            .withColumn("prev_recall", F.coalesce(F.lag("recall").over(w_lag), F.lit(-0.01)))
-        )
+    w_lag = Window.partitionBy("cls", "thresh").orderBy(F.desc("score"))
+    w = w_lag.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    w_rev = w_lag.rowsBetween(Window.currentRow, Window.unboundedFollowing)
+    pr = (
+        det.join(totals, "cls")
+        .withColumn("tp_cum", F.sum("tp").over(w))
+        .withColumn("k", F.row_number().over(w_lag))
+        .withColumn("recall", F.col("tp_cum") / F.col("total_gt"))
+        .withColumn("precision", F.col("tp_cum") / F.col("k"))
+        .withColumn("p_interp", F.max("precision").over(w_rev))
+        .withColumn("prev_recall", F.coalesce(F.lag("recall").over(w_lag), F.lit(-0.01)))
+    )
     covered = F.greatest(
         F.lit(0.0),
         F.floor(F.col("recall") * 100 + 1e-9) - F.floor(F.col("prev_recall") * 100 + 1e-9),

@@ -207,38 +207,34 @@ def _apply_hooks(detected: list, hooks: Sequence[LocHook]) -> list:
     return out
 
 
-def payload_source(transcripts: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def payload_source(transcripts: DataFrame) -> DataFrame:
     """The payload turns ``(conv_id, turn_idx, text)`` of ``transcripts``,
     de-skewed by an ``xxhash64(conv_id, turn_idx)`` repartition: the input
     of every payload-reading stage. The ``contains`` filter and the
     projection push into the scan, so prose-only turns never reach Python.
 
-    ``num_partitions=None`` leaves the partition count of the exchange to
-    AQE, which coalesces it by shuffle bytes towards one task per core:
-    every Python task pays a fixed worker setup cost
-    (`tools/probe_task_overhead.py`) that more, smaller tasks multiply.
-    AQE only merges partitions, so the stage runs at most
-    ``spark.sql.shuffle.partitions`` tasks; `session.get_spark` defaults
-    that to at least 2x cores. An int forces exactly that many tasks."""
+    The repartition is by column, so AQE sizes the exchange: it coalesces
+    it by shuffle bytes towards one task per core, since every Python task
+    pays a fixed worker setup cost (`tools/probe_task_overhead.py`) that
+    more, smaller tasks multiply. AQE only merges partitions, so the stage
+    runs at most ``spark.sql.shuffle.partitions`` tasks; `session.get_spark`
+    defaults that to at least 2x cores."""
     src = transcripts.where(F.col("text").contains(PAYLOAD_MARK)).select(
         "conv_id", "turn_idx", "text"
     )
-    key = F.xxhash64("conv_id", "turn_idx")
-    return src.repartition(key) if num_partitions is None else src.repartition(num_partitions, key)
+    return src.repartition(F.xxhash64("conv_id", "turn_idx"))
 
 
 def extract_rows(
     transcripts: DataFrame,
     sink: Sink,
-    crop_partitions: int | None = None,
     opts: KernelOptions = KernelOptions(),
     hooks: Sequence[LocHook] = (),
 ) -> DataFrame:
     """Payload-turn source + the extraction kernel: the shared plan of every
-    extraction entry point. ``crop_partitions`` sizes the source exchange
-    (:func:`payload_source`; None: AQE-sized)."""
-    src = payload_source(transcripts, crop_partitions)
-    return src.mapInPandas(make_kernel(sink, opts, hooks), schema=sink.schema)
+    extraction entry point."""
+    kernel = make_kernel(sink, opts, hooks)
+    return payload_source(transcripts).mapInPandas(kernel, schema=sink.schema)
 
 
 def map_pages(
@@ -314,7 +310,6 @@ PAGE_SINK = Sink(
 
 def extract_documents(
     transcripts: DataFrame,
-    crop_partitions: int | None = None,
     include_all_turns: bool = False,
     *,
     loc_hooks: Sequence[LocHook] | None = None,
@@ -331,24 +326,19 @@ def extract_documents(
     (`doctr/models/predictor/base.py:310-316`): each hook maps one turn's
     loc_preds (one (N, 5) ``[xmin, ymin, xmax, ymax, score]`` relative float
     array per page) to new loc_preds, between detection and cropping.
-    ``crop_partitions``: None lets AQE size the extraction stage, an int
-    fixes its task count (:func:`extract_rows`).
     """
-    docs = extract_rows(
-        transcripts, DOCUMENT_SINK, crop_partitions, KernelOptions(**options), loc_hooks or ()
-    )
+    docs = extract_rows(transcripts, DOCUMENT_SINK, KernelOptions(**options), loc_hooks or ())
     if include_all_turns:
         keys = transcripts.select("conv_id", "turn_idx")
         docs = keys.join(docs, on=["conv_id", "turn_idx"], how="left")
     return docs
 
 
-def extract_pages(transcripts: DataFrame, crop_partitions: int | None = None) -> DataFrame:
+def extract_pages(transcripts: DataFrame) -> DataFrame:
     """The pipeline stopping at BUILT PAGES: one row per page
     ``(conv_id, turn_idx, page_idx, n_words, page_text, page_json)`` — the
-    shared input of the export surface (`operators.kie.export_documents`).
-    ``crop_partitions`` as in :func:`extract_rows` (None: AQE-sized)."""
-    return extract_rows(transcripts, PAGE_SINK, crop_partitions)
+    shared input of the export surface (`operators.kie.export_documents`)."""
+    return extract_rows(transcripts, PAGE_SINK)
 
 
 def ordered(docs: DataFrame) -> DataFrame:

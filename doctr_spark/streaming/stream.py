@@ -27,26 +27,27 @@ from ..fixtures.transcripts import TRANSCRIPTS_SCHEMA
 from ..operators.pipeline import extract_documents
 
 
-def stream_extraction(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    checkpoint_dir: str,
-    crop_partitions: int | None = None,
-    max_files_per_trigger: int = 8,
-) -> StreamingQuery:
-    """Watch ``input_dir`` for transcript parquet files and extract them
-    incrementally. Returns the started StreamingQuery. ``crop_partitions``
-    is passed to `extract_documents` per micro-batch: None lets AQE size
-    each batch's extraction stage, an int fixes its task count."""
-    source = (
+def _source(spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8) -> DataFrame:
+    return (
         spark.readStream.schema(TRANSCRIPTS_SCHEMA)
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(input_dir)
     )
 
+
+def stream_extraction(
+    spark: SparkSession,
+    input_dir: str,
+    output_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int = 8,
+) -> StreamingQuery:
+    """Watch ``input_dir`` for transcript parquet files and extract them
+    incrementally. Returns the started StreamingQuery; AQE sizes each
+    micro-batch's extraction stage."""
+
     def process_batch(batch_df, batch_id: int) -> None:
-        docs = extract_documents(batch_df, crop_partitions=crop_partitions)
+        docs = extract_documents(batch_df)
         # idempotent per micro-batch: a replayed batch (crash after write,
         # before the offset commit) overwrites its own batch directory
         # instead of appending duplicates — this is what makes foreachBatch
@@ -54,18 +55,11 @@ def stream_extraction(
         docs.write.mode("overwrite").parquet(f"{output_dir}/batch_id={batch_id}")
 
     return (
-        source.writeStream.foreachBatch(process_batch)
+        _source(spark, input_dir, max_files_per_trigger)
+        .writeStream.foreachBatch(process_batch)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
-    )
-
-
-def _source(spark: SparkSession, input_dir: str, max_files_per_trigger: int = 8) -> DataFrame:
-    return (
-        spark.readStream.schema(TRANSCRIPTS_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
     )
 
 

@@ -47,7 +47,6 @@ class OCRPredictor:
     keep_reading_order: bool = _K.keep_reading_order
     text_direction: str | None = _K.text_direction
     mask_region_labels: tuple[str, ...] | None = _K.mask_region_labels
-    crop_partitions: int | None = None  # None: AQE-sized (pipeline.extract_rows)
     include_all_turns: bool = False
     include_furniture: bool = _K.include_furniture
     reco_vocab: str = _K.reco_vocab
@@ -82,7 +81,6 @@ class OCRPredictor:
     def __call__(self, transcripts: DataFrame) -> DataFrame:
         return extract_documents(
             transcripts,
-            crop_partitions=self.crop_partitions,
             include_all_turns=self.include_all_turns,
             loc_hooks=self.hooks,
             **asdict(self.kernel_options()),
@@ -93,13 +91,9 @@ def ocr_predictor(det_arch: str = "db_like", reco_arch: str = "ctc", **kwargs) -
     return OCRPredictor(det_arch=det_arch, reco_arch=reco_arch, **kwargs)
 
 
-def kie_predictor(crop_partitions: int | None = None) -> Callable[[DataFrame], DataFrame]:
+def kie_predictor() -> Callable[[DataFrame], DataFrame]:
     """KIE variant (`kie_predictor`, zoo.py:250-325): per-class prediction
-    pages instead of Line/Block nesting. ``crop_partitions``: None lets AQE
-    size the extraction stage, an int fixes its task count."""
+    pages instead of Line/Block nesting."""
     from .operators.kie import kie_extract
 
-    def predictor(transcripts: DataFrame) -> DataFrame:
-        return kie_extract(transcripts, crop_partitions=crop_partitions)
-
-    return predictor
+    return kie_extract

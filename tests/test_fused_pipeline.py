@@ -133,18 +133,28 @@ def _plan(df) -> str:
 
 
 def test_default_exchange_is_aqe_sized(inputs):
-    """Without ``crop_partitions`` the de-skew exchange is a by-column
-    repartition that AQE may coalesce, with the golden output; an explicit
-    count still forces a fixed-count exchange with the same output."""
+    """The de-skew exchange is a by-column repartition that AQE may
+    coalesce, with the golden output; the output does not depend on the
+    task count: 32 uncoalesced shuffle partitions give the same digest."""
     tdf = inputs("synthetic")
     docs = extract_documents(tdf)
     plan = _plan(docs)
     assert "hashpartitioning(xxhash64(conv_id#" in plan, plan
     assert "REPARTITION_BY_COL" in plan and "REPARTITION_BY_NUM" not in plan, plan
     assert digest(docs) == CASES["synthetic"][3]
-    fixed = extract_documents(tdf, crop_partitions=32)
-    assert "REPARTITION_BY_NUM" in _plan(fixed)
-    assert digest(fixed) == CASES["synthetic"][3]
+
+    conf = tdf.sparkSession.conf
+    keys = ("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    saved = [conf.get(k) for k in keys]
+    conf.set(keys[0], "32")
+    conf.set(keys[1], "false")
+    try:
+        fine = extract_documents(tdf)
+        assert fine.rdd.getNumPartitions() == 32
+        assert digest(fine) == CASES["synthetic"][3]
+    finally:
+        for k, v in zip(keys, saved, strict=True):
+            conf.set(k, v)
 
 
 def test_small_input_runs_few_python_tasks(spark):
@@ -225,7 +235,7 @@ def test_fused_quarantines_corrupt_payloads(spark):
     )
     tdf = spark.createDataFrame(rows)
     for entry in ENTRY_POINTS.values():
-        assert entry(tdf, crop_partitions=2).count() == 0, entry.__name__
+        assert entry(tdf).count() == 0, entry.__name__
 
 
 def test_page_operators_quarantine_corrupt_payloads(spark):

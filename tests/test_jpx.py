@@ -176,7 +176,7 @@ def test_fixture_jpx_mode_extracts_exact(spark):
 
     rows, gts = gen_pdf_conversation(21)
     tdf = spark.createDataFrame(pd.DataFrame(rows), schema=TRANSCRIPTS_SCHEMA)
-    docs = extract_documents(tdf, crop_partitions=4)
+    docs = extract_documents(tdf)
     got = {
         (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["n_words"])
         for r in docs.collect()

@@ -134,7 +134,7 @@ def test_mask_picture_regions_in_pipeline(spark):
     )
     boxes = detect_boxes(tdf, mask_region_labels=("picture",))
     assert boxes.where("word_idx >= 0").count() == 1  # only the word detected
-    row = extract_documents(tdf, mask_region_labels=("picture",), crop_partitions=2).first()
+    row = extract_documents(tdf, mask_region_labels=("picture",)).first()
     assert row["extracted_text"] == "hello" and row["n_words"] == 1
 
 

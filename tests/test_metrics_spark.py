@@ -80,7 +80,7 @@ def test_kie_pipeline_spark(spark):
     from doctr_spark.operators.kie import kie_class_counts, kie_extract
 
     tdf = generate_transcripts(spark, 8)
-    pages = kie_extract(tdf, crop_partitions=4)
+    pages = kie_extract(tdf)
     counts = kie_class_counts(pages).collect()
     assert len(counts) > 0
     assert all(r["n_number"] + r["n_alpha"] + r["n_mixed"] > 0 for r in counts)
@@ -92,7 +92,7 @@ def test_export_formats_spark(spark):
     from doctr_spark.operators.pipeline import extract_pages
 
     tdf = generate_transcripts(spark, 6)
-    built = extract_pages(tdf, crop_partitions=4)
+    built = extract_pages(tdf)
     html = export_documents(built, "html").collect()
     assert len(html) > 0
     assert any("<p>" in r["content"] for r in html if r["content"])
@@ -195,75 +195,3 @@ def test_object_detection_map_matches_reference_semantics(spark):
     expected = round((34 * 1.0 + 33 * (2 / 3)) / 101, 6)
     for t, ap in out.items():
         assert ap == expected, (t, ap)
-
-
-def test_object_detection_map_two_level_pr_identical(spark):
-    """The distributed two-level PR fold (partition-partial cumsums +
-    broadcast offsets + suffix-max merge) must reproduce the
-    single-window PR curve EXACTLY — same hand-computable case plus a
-    randomized many-detection case with distinct scores."""
-    from doctr_spark.operators.metrics import object_detection_map
-
-    b = [0.1, 0.1, 0.3, 0.3]
-    far = [0.7, 0.7, 0.9, 0.9]
-    rows = [
-        ([b, far], [0, 0], [b, [0.45, 0.45, 0.6, 0.6]], [0, 0], [0.9, 0.85]),
-        ([b], [0], [b], [0], [0.8]),
-    ]
-    schema = (
-        "gt_boxes array<array<double>>, gt_labels array<bigint>, "
-        "pred_boxes array<array<double>>, pred_labels array<bigint>, pred_scores array<double>"
-    )
-    # randomized case: 3 classes, 40 images, jittered boxes, unique scores
-    import numpy as np
-
-    rng = np.random.default_rng(5)
-    for img in range(40):
-        gt_b, gt_l, p_b, p_l, p_s = [], [], [], [], []
-        for k in range(int(rng.integers(1, 5))):
-            x, y = (float(v) for v in rng.uniform(0, 0.6, 2))
-            box = [x, y, x + 0.25, y + 0.25]
-            cls = int(rng.integers(0, 3))
-            gt_b.append(box)
-            gt_l.append(cls)
-            if rng.random() < 0.8:  # jittered detection (TP or near-miss)
-                dx, dy = (float(v) for v in rng.uniform(-0.08, 0.08, 2))
-                p_b.append([box[0] + dx, box[1] + dy, box[2] + dx, box[3] + dy])
-                p_l.append(cls)
-                p_s.append(float(img * 10 + k) / 1000 + float(rng.random()) / 1e6)
-            if rng.random() < 0.3:  # spurious FP
-                x2, y2 = (float(v) for v in rng.uniform(0, 0.7, 2))
-                p_b.append([x2, y2, x2 + 0.2, y2 + 0.2])
-                p_l.append(int(rng.integers(0, 3)))
-                p_s.append(float(rng.random()))
-        rows.append((gt_b, gt_l, p_b, p_l, p_s))
-    pairs = spark.createDataFrame(rows, schema)
-    single = {r.iou_thresh: r.mean_ap for r in object_detection_map(pairs).collect()}
-    two = {
-        r.iou_thresh: r.mean_ap
-        for r in object_detection_map(pairs, two_level_pr=True).collect()
-    }
-    assert single == two and len(single) == 10
-
-
-def test_object_detection_map_auto_two_level(spark, monkeypatch):
-    """two_level_pr=None auto-selects by prediction volume: with the
-    switch point forced to 0 the distributed fold runs and must still
-    equal the single-window curve."""
-    from doctr_spark.operators import metrics
-    from doctr_spark.operators.metrics import object_detection_map
-
-    b = [0.1, 0.1, 0.3, 0.3]
-    rows = [
-        ([b], [0], [b, [0.5, 0.5, 0.7, 0.7]], [0, 0], [0.9, 0.4]),
-        ([b], [0], [b], [0], [0.8]),
-    ]
-    schema = (
-        "gt_boxes array<array<double>>, gt_labels array<bigint>, "
-        "pred_boxes array<array<double>>, pred_labels array<bigint>, pred_scores array<double>"
-    )
-    pairs = spark.createDataFrame(rows, schema)
-    single = {r.iou_thresh: r.mean_ap for r in object_detection_map(pairs, two_level_pr=False).collect()}
-    monkeypatch.setattr(metrics, "TWO_LEVEL_PR_AUTO_ROWS", 0)
-    auto = {r.iou_thresh: r.mean_ap for r in object_detection_map(pairs).collect()}
-    assert single == auto and len(auto) == 10

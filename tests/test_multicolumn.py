@@ -64,7 +64,7 @@ def test_multicolumn_naive_order_differs():
 
 def test_multicolumn_pipeline_end_to_end(spark):
     tdf, gdf = generate_multicolumn_transcripts(spark, 4, with_gt=True)
-    docs = extract_documents(tdf, keep_reading_order=True, crop_partitions=8)
+    docs = extract_documents(tdf, keep_reading_order=True)
     gt = gdf.withColumnRenamed("n_words", "gt_n_words")
     j = (
         docs.join(gt, ["conv_id", "turn_idx"])

@@ -69,10 +69,10 @@ def test_straighten_pages_pipeline(spark):
         [("c1", 0, "user", make_img_payload(rotated), None)],
         "conv_id string, turn_idx int, role string, text string, tool string",
     ).withColumn("ts", F.current_timestamp())
-    r = extract_documents(t, crop_partitions=2, straighten_pages=True).first()
+    r = extract_documents(t, straighten_pages=True).first()
     assert r.extracted_text == page.gt_text
     import json
     assert json.loads(r.pages_json[0])["orientation"] == {"value": 180, "confidence": 1.0}
     # without straightening the rotated page is unreadable
-    r2 = extract_documents(t, crop_partitions=2).first()
+    r2 = extract_documents(t).first()
     assert r2.extracted_text != page.gt_text

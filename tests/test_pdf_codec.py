@@ -134,7 +134,7 @@ def test_pdf_extraction_end_to_end(spark):
     from doctr_spark.operators.pipeline import extract_documents
 
     tdf, gdf = generate_pdf_transcripts(spark, 6, with_gt=True)
-    docs = extract_documents(tdf, crop_partitions=8)
+    docs = extract_documents(tdf)
     gt = gdf.withColumnRenamed("n_words", "gt_n_words")
     rows = (
         docs.join(gt, ["conv_id", "turn_idx"])
@@ -1057,7 +1057,7 @@ def test_fixture_subset_font_modes_extract_exact(spark):
         rows += r
         gts += g
     tdf = spark.createDataFrame(pd.DataFrame(rows), schema=TRANSCRIPTS_SCHEMA)
-    docs = extract_documents(tdf, crop_partitions=4)
+    docs = extract_documents(tdf)
     got = {
         (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["n_words"])
         for r in docs.collect()
@@ -1104,7 +1104,7 @@ def test_fixture_mixed_font_mode_extracts_exact(spark):
 
     rows, gts = gen_pdf_conversation(22)
     tdf = spark.createDataFrame(pd.DataFrame(rows), schema=TRANSCRIPTS_SCHEMA)
-    docs = extract_documents(tdf, crop_partitions=4)
+    docs = extract_documents(tdf)
     got = {
         (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["n_words"])
         for r in docs.collect()
@@ -1218,7 +1218,7 @@ def test_fixture_type3_mode_extracts_exact(spark):
 
     rows, gts = gen_pdf_conversation(23)
     tdf = spark.createDataFrame(pd.DataFrame(rows), schema=TRANSCRIPTS_SCHEMA)
-    docs = extract_documents(tdf, crop_partitions=4)
+    docs = extract_documents(tdf)
     got = {
         (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["n_words"])
         for r in docs.collect()
@@ -1258,7 +1258,7 @@ def test_fixture_incremental_mode_extracts_exact(spark):
 
     rows, gts = gen_pdf_conversation(24)
     tdf = spark.createDataFrame(pd.DataFrame(rows), schema=TRANSCRIPTS_SCHEMA)
-    docs = extract_documents(tdf, crop_partitions=4)
+    docs = extract_documents(tdf)
     got = {
         (r["conv_id"], r["turn_idx"]): (r["extracted_text"], r["n_words"])
         for r in docs.collect()

@@ -13,7 +13,7 @@ from doctr_spark.operators.pipeline import extract_documents, ordered
 @pytest.fixture(scope="module")
 def results(spark):
     tdf, gdf = generate_transcripts(spark, 30, with_gt=True)
-    docs = extract_documents(tdf, crop_partitions=4)
+    docs = extract_documents(tdf)
     joined = (
         docs.withColumnRenamed("n_words", "got_words")
         .withColumnRenamed("n_pages", "got_pages")
@@ -51,7 +51,7 @@ def test_export_structure(results):
 
 def test_include_all_turns_and_ordering(spark, results):
     _, tdf = results
-    docs = extract_documents(tdf.limit(200), include_all_turns=True, crop_partitions=4)
+    docs = extract_documents(tdf.limit(200), include_all_turns=True)
     out = ordered(docs)
     rows = out.collect()
     assert len(rows) == 200
@@ -66,7 +66,7 @@ def test_payload_predicate_pushdown(spark, tmp_path):
     tdf = generate_transcripts(spark, 5)
     path = str(tmp_path / "transcripts.parquet")
     tdf.write.mode("overwrite").parquet(path)
-    docs = extract_documents(spark.read.parquet(path), crop_partitions=2)
+    docs = extract_documents(spark.read.parquet(path))
     plan = docs._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "text" in plan and "StringContains" in plan.replace("string_contains", "StringContains") or "contains" in plan
@@ -76,7 +76,7 @@ def test_loc_hooks_filter_crops(spark, check_loc_hooks):
     """The add_hook analogue: hooks rewrite one turn's loc_preds between
     detection and cropping, inside the extraction kernel."""
     tdf = generate_transcripts(spark, 6)
-    check_loc_hooks(lambda hooks: extract_documents(tdf, crop_partitions=4, loc_hooks=hooks))
+    check_loc_hooks(lambda hooks: extract_documents(tdf, loc_hooks=hooks))
 
 
 def test_non_text_regions_do_not_crash_or_leak(spark):
@@ -103,6 +103,6 @@ def test_non_text_regions_do_not_crash_or_leak(spark):
         [("c0", 0, "user", f"see {make_img_payload(canvas)}", None, dt.datetime(2024, 1, 1))],
         "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp",
     )
-    row = extract_documents(tdf, crop_partitions=2).first()
+    row = extract_documents(tdf).first()
     assert row["extracted_text"] == "hello world"
     assert row["n_words"] == 2

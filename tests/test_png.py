@@ -91,5 +91,5 @@ def test_png_payload_extracts(spark):
     tdf = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    got = extract_documents(tdf, crop_partitions=2).first()
+    got = extract_documents(tdf).first()
     assert got["extracted_text"] == page.gt_text

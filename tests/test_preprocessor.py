@@ -114,7 +114,7 @@ def test_extraction_with_letterbox_pad_only_is_bit_exact(spark):
     tdf, gdf = generate_transcripts(spark, 8, with_gt=True)
     from doctr_spark.config import PAGE_W
 
-    docs = extract_documents(tdf, crop_partitions=8, det_input_size=(640, PAGE_W))
+    docs = extract_documents(tdf, det_input_size=(640, PAGE_W))
     j = docs.join(gdf, ["conv_id", "turn_idx"]).select(
         (F.col("extracted_text") == F.col("gt_text")).alias("ok")
     ).collect()
@@ -132,7 +132,7 @@ def test_extraction_with_downscale_letterbox_stays_exact(spark):
     from doctr_spark.operators.pipeline import extract_documents
 
     tdf, gdf = generate_transcripts(spark, 12, with_gt=True)
-    docs = extract_documents(tdf, crop_partitions=8, det_input_size=(480, 384))
+    docs = extract_documents(tdf, det_input_size=(480, 384))
     j = docs.join(gdf, ["conv_id", "turn_idx"]).select(
         (F.col("extracted_text") == F.col("gt_text")).alias("ok")
     ).collect()

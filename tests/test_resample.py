@@ -66,7 +66,7 @@ def test_normalize_crop_height_scales():
 
 def test_resampled_extraction_meets_tolerance(spark):
     tdf, gdf = generate_resampled_transcripts(spark, 5, with_gt=True)
-    docs = extract_documents(tdf, straighten_pages=True, crop_partitions=8)
+    docs = extract_documents(tdf, straighten_pages=True)
     gt = gdf.select(
         "conv_id",
         "turn_idx",

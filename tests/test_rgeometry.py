@@ -199,7 +199,7 @@ def test_skewed_extraction_bit_exact(spark):
     from doctr_spark.operators.pipeline import extract_documents
 
     tdf, gdf = generate_skewed_transcripts(spark, 10, with_gt=True)
-    docs = extract_documents(tdf, straighten_pages=True, crop_partitions=8)
+    docs = extract_documents(tdf, straighten_pages=True)
     j = docs.join(gdf, ["conv_id", "turn_idx"], "full")
     n, match = j.select(
         F.count("*"), F.sum((F.col("extracted_text") == F.col("gt_text")).cast("int"))

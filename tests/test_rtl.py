@@ -39,7 +39,7 @@ def test_rtl_page_kernel_roundtrip(conv_no):
 
 def test_rtl_pipeline_end_to_end(spark):
     tdf, gdf = generate_rtl_transcripts(spark, 4, with_gt=True)
-    docs = extract_documents(tdf, reco_vocab="rtl", text_direction="auto", crop_partitions=8)
+    docs = extract_documents(tdf, reco_vocab="rtl", text_direction="auto")
     gt = gdf.withColumnRenamed("n_words", "gt_n_words")
     j = (
         docs.join(gt, ["conv_id", "turn_idx"])

@@ -36,21 +36,19 @@ def test_read_transcripts_table_branch(spark):
         spark.catalog.dropTempView("transcripts_seam")
 
 
-def test_shuffle_partitions_parses_config_safely():
-    """`spark.sql.shuffle.partitions` as managed platforms set it: a count,
-    ``auto`` or nothing; the last two fall back to defaultParallelism.
-    Spark-free: a stand-in session carries only the two fields read."""
-    from types import SimpleNamespace
+def test_keyed_scan_guard_is_aqe_sized(spark):
+    """A keyed scan guard on a one-split input is a by-column hash
+    repartition on the key, which AQE may coalesce, and the per-document
+    aggregation reuses it: no fixed-count exchange in the plan."""
+    from doctr_spark.operators.dedup import _doc_signatures, simhash
+    from doctr_spark.operators.text_analysis import char_entropy
 
-    from doctr_spark.io.sources import shuffle_partitions
-
-    def session(value):
-        conf = {} if value is None else {"spark.sql.shuffle.partitions": value}
-        return SimpleNamespace(
-            conf=SimpleNamespace(get=conf.get),
-            sparkContext=SimpleNamespace(defaultParallelism=6),
-        )
-
-    assert shuffle_partitions(session("16")) == 16
-    assert shuffle_partitions(session("auto")) == 6
-    assert shuffle_partitions(session(None)) == 6
+    assert spark.read.parquet(f"{SF_DIR}/documents.parquet").rdd.getNumPartitions() < (
+        spark.sparkContext.defaultParallelism
+    )
+    for op in (_doc_signatures, simhash, char_entropy):
+        plan = op(spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+        assert "hashpartitioning(doc_id#" in plan, (op.__name__, plan)
+        assert "REPARTITION_BY_COL" in plan, (op.__name__, plan)
+        assert "REPARTITION_BY_NUM" not in plan, (op.__name__, plan)
+        assert "ENSURE_REQUIREMENTS" not in plan, (op.__name__, plan)

@@ -20,18 +20,18 @@ def test_stream_extraction_incremental(spark, tmp_path):
 
     first = generate_transcripts(spark, 6)
     first.write.mode("append").parquet(inp)
-    q = stream_extraction(spark, inp, out, ckpt, crop_partitions=4)
+    q = stream_extraction(spark, inp, out, ckpt)
     q.awaitTermination(300)
 
-    expected1 = extract_documents(spark.read.parquet(inp), crop_partitions=4).count()
+    expected1 = extract_documents(spark.read.parquet(inp)).count()
     assert spark.read.parquet(out).count() == expected1
 
     # new files arrive; a fresh availableNow run processes ONLY them
     generate_transcripts(spark, 12).where("conv_id > 'conv0000005'").write.mode("append").parquet(inp)
-    q2 = stream_extraction(spark, inp, out, ckpt, crop_partitions=4)
+    q2 = stream_extraction(spark, inp, out, ckpt)
     q2.awaitTermination(300)
 
-    total_expected = extract_documents(spark.read.parquet(inp), crop_partitions=4).count()
+    total_expected = extract_documents(spark.read.parquet(inp)).count()
     got = spark.read.parquet(out)
     assert got.count() == total_expected  # no duplicates from the first batch
     assert got.select("conv_id", "turn_idx").distinct().count() == total_expected

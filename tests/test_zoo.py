@@ -24,7 +24,7 @@ def test_predictor_defaults_are_kernel_defaults():
 def test_attention_arch_matches_ctc(spark):
     tdf, gdf = generate_transcripts(spark, 8, with_gt=True)
     for arch in ("ctc", "attention"):
-        predictor = ocr_predictor(reco_arch=arch, crop_partitions=4)
+        predictor = ocr_predictor(reco_arch=arch)
         docs = predictor(tdf)
         j = docs.join(gdf.select("conv_id", "turn_idx", "gt_text"), ["conv_id", "turn_idx"])
         n, match = j.select(
@@ -37,14 +37,14 @@ def test_add_hook_and_kie_factory(spark, check_loc_hooks):
     tdf = generate_transcripts(spark, 6)
 
     def run(hooks):
-        predictor = ocr_predictor(crop_partitions=4)
+        predictor = ocr_predictor()
         for hook in hooks:
             predictor.add_hook(hook)
         return predictor(tdf)
 
     check_loc_hooks(run)
 
-    kie = kie_predictor(crop_partitions=4)
+    kie = kie_predictor()
     assert kie(tdf).count() > 0
 
 
@@ -83,7 +83,7 @@ def test_det_arch_wired_through_zoo(spark):
     )
     texts = {}
     for arch in ("db_like", "fast_like"):
-        docs = ocr_predictor(det_arch=arch, crop_partitions=2)(tdf)
+        docs = ocr_predictor(det_arch=arch)(tdf)
         texts[arch] = docs.select("extracted_text").first()[0]
     assert texts["db_like"] == "strong"
     assert texts["fast_like"] == "strong\nfaint"
