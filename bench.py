@@ -81,9 +81,10 @@ def run_bench(sf_dir: str, cpus: str, shuffle_partitions: int | None = None) -> 
         "q2_ocr_synthetic",
         lambda: extract_documents(tdf).count(),
     )
-    tdf.unpersist(blocking=True)  # release storage BEFORE q3's eager persist
-    # q3: minhash-LSH near-dup pairs (returns a persisted pair list —
-    # release it so q4/q5 run against clean executor storage)
+    tdf.unpersist(blocking=True)  # release the fixture's storage before q3
+    # q3: minhash-LSH near-dup pairs (one lazy plan that persists nothing,
+    # so the clearCache() below has nothing to release; it stays to keep
+    # the timed sequence unchanged)
     timed("q3_dedup_minhash_lsh", lambda: dedup.minhash_lsh_pairs(spark, sf_dir).count())
     spark.catalog.clearCache()
     # q4: brute-force cosine top-k

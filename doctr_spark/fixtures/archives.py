@@ -125,262 +125,6 @@ def fabricate_sroie(root: str, n_imgs: int = 4, seed: int = 2) -> list[dict]:
     return expected
 
 
-def fabricate_detection(root: str, n_imgs: int = 4, seed: int = 3) -> list[dict]:
-    """DetectionDataset labels.json: even images use the list form (class
-    'words'), odd images the dict form with two explicit classes."""
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/images")
-    labels: dict = {}
-    expected = []
-    for i in range(n_imgs):
-        name = f"page_{i:03d}.png"
-        words = _gen_words(rng, 3)
-        polys = [
-            [[x0, y0], [x1, y0], [x1, y1], [x0, y1]] for _, (x0, y0, x1, y1) in words
-        ]
-        if i % 2 == 0:
-            labels[name] = {"polygons": polys}
-            classes = [["words"] * len(polys)][0]
-        else:
-            labels[name] = {"polygons": {"title": polys[:1], "body": polys[1:]}}
-            classes = ["title"] + ["body"] * (len(polys) - 1)
-            polys = polys[:1] + polys[1:]
-        _touch(f"{root}/images/{name}")
-        expected.append(
-            {
-                "img_path": f"{root}/images/{name}",
-                "boxes": [[p[0][0], p[0][1], p[2][0], p[2][1]] for p in polys],
-                "labels": classes,
-            }
-        )
-    with open(f"{root}/labels.json", "w") as f:
-        json.dump(labels, f)
-    return expected
-
-
-def fabricate_recognition(root: str, n_crops: int = 6, seed: int = 4) -> list[dict]:
-    """RecognitionDataset labels.json: crop image name -> label string."""
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/crops")
-    labels = {}
-    expected = []
-    for i in range(n_crops):
-        name = f"crop_{i:03d}.png"
-        labels[name] = rng.choice(_WORDS)
-        _touch(f"{root}/crops/{name}")
-        expected.append({"img_path": f"{root}/crops/{name}", "label": labels[name]})
-    with open(f"{root}/labels.json", "w") as f:
-        json.dump(labels, f)
-    return expected
-
-
-def fabricate_ocr(root: str, n_imgs: int = 4, seed: int = 5) -> list[dict]:
-    """OCRDataset label file: img -> typed_words with xyxy geometry; one
-    image is empty (the loader must keep it with zero boxes)."""
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/images")
-    data: dict = {}
-    expected = []
-    for i in range(n_imgs):
-        name = f"scan_{i:03d}.png"
-        words = [] if i == n_imgs - 1 else _gen_words(rng, 3)
-        data[name] = {
-            "typed_words": [{"geometry": b, "value": t} for t, b in words]
-        }
-        _touch(f"{root}/images/{name}")
-        expected.append(
-            {
-                "img_path": f"{root}/images/{name}",
-                "boxes": [b for _, b in words],
-                "labels": [t for t, _ in words],
-            }
-        )
-    with open(f"{root}/labels.json", "w") as f:
-        json.dump(data, f)
-    return expected
-
-
-def fabricate_svt(root: str, n_imgs: int = 3, seed: int = 6) -> list[dict]:
-    """SVT tree: svt1/train.xml with taggedRectangle x/y/width/height."""
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/svt1/img")
-    imgs_xml, expected = [], []
-    for i in range(n_imgs):
-        name = f"img/{i:02d}_{i:02d}.jpg"
-        words = _gen_words(rng, 3)
-        rects = []
-        exp_boxes, exp_labels = [], []
-        for t, (x0, y0, x1, y1) in words:
-            rects.append(
-                f'<taggedRectangle x="{x0}" y="{y0}" width="{x1 - x0}" height="{y1 - y0}">'
-                f"<tag>{t.upper()}</tag></taggedRectangle>"
-            )
-            exp_boxes.append([x0, y0, x1, y1])
-            exp_labels.append(t.upper())
-        imgs_xml.append(
-            f"<image><imageName>{name}</imageName><address>a</address><lex>l</lex>"
-            f"<Resolution x=\"1000\" y=\"1000\"/>"
-            f"<taggedRectangles>{''.join(rects)}</taggedRectangles></image>"
-        )
-        _touch(f"{root}/svt1/{name}")
-        expected.append(
-            {"img_path": f"{root}/svt1/{name}", "boxes": exp_boxes, "labels": exp_labels}
-        )
-    with open(f"{root}/svt1/train.xml", "w") as f:
-        f.write("<tagset>" + "".join(imgs_xml) + "</tagset>")
-    return expected
-
-
-def fabricate_ic13(root: str, n_imgs: int = 3, seed: int = 7) -> list[dict]:
-    """IC13 tree: images/ + gt/gt_<stem>.txt, comma+space delimited rows."""
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/images", f"{root}/gt")
-    expected = []
-    for i in range(n_imgs):
-        stem = f"word_{i:03d}"
-        words = _gen_words(rng, 3)
-        rows = [
-            f'{int(x0)}, {int(y0)}, {int(x1)}, {int(y1)}, "{t}"'
-            for t, (x0, y0, x1, y1) in words
-        ]
-        with open(f"{root}/gt/gt_{stem}.txt", "w") as f:
-            f.write("\n".join(rows) + "\n")
-        _touch(f"{root}/images/{stem}.png")
-        expected.append(
-            {
-                "img_path": f"{root}/images/{stem}.png",
-                "boxes": [b for _, b in words],
-                "labels": [t for t, _ in words],
-            }
-        )
-    return expected
-
-
-def fabricate_wildreceipt(root: str, n_imgs: int = 3, seed: int = 8) -> list[dict]:
-    """WildReceipt: images/ + train.txt JSON-lines with 8-coord boxes."""
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/images")
-    recs, expected = [], []
-    for i in range(n_imgs):
-        name = f"rec_{i:03d}.jpeg"
-        words = _gen_words(rng, 3)
-        anns = []
-        for t, (x0, y0, x1, y1) in words:
-            anns.append({"box": [x0, y0, x1, y0, x1, y1, x0, y1], "text": t, "label": 1})
-        recs.append(json.dumps({"file_name": name, "annotations": anns}))
-        _touch(f"{root}/images/{name}")
-        expected.append(
-            {
-                "img_path": f"{root}/images/{name}",
-                "boxes": [b for _, b in words],
-                "labels": [t for t, _ in words],
-            }
-        )
-    with open(f"{root}/train.txt", "w") as f:
-        f.write("\n".join(recs) + "\n")
-    return expected
-
-
-def fabricate_coco_text(root: str, n_imgs: int = 3, seed: int = 9) -> list[dict]:
-    """COCO-Text: ONE cocotext.json with imgs/anns maps; includes a test-set
-    image and an illegible annotation that the train loader must drop."""
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/images")
-    imgs, anns = {}, {}
-    expected = []
-    aid = 0
-    for i in range(n_imgs):
-        img_id = str(1000 + i)
-        name = f"coco_{i:03d}.jpg"
-        which = "test" if i == n_imgs - 1 else "train"
-        imgs[img_id] = {"file_name": name, "set": which}
-        words = _gen_words(rng, 3)
-        exp_boxes, exp_labels = [], []
-        for j, (t, (x0, y0, x1, y1)) in enumerate(words):
-            aid += 1
-            legible = not (which == "train" and j == 2)  # one illegible train ann
-            anns[str(aid)] = {
-                "image_id": int(img_id),
-                "legibility": "legible" if legible else "illegible",
-                "bbox": [x0, y0, x1 - x0, y1 - y0],
-                "utf8_string": t,
-            }
-            if legible and which == "train":
-                exp_boxes.append([float(int(x0)), float(int(y0)), float(int(x1)), float(int(y1))])
-                exp_labels.append(t)
-        _touch(f"{root}/images/{name}")
-        if which == "train":
-            expected.append(
-                {"img_path": f"{root}/images/{name}", "boxes": exp_boxes, "labels": exp_labels}
-            )
-    with open(f"{root}/cocotext.json", "w") as f:
-        json.dump({"imgs": imgs, "anns": anns}, f)
-    return expected
-
-
-def fabricate_mjsynth(root: str, n_imgs: int = 5, seed: int = 10) -> list[dict]:
-    """MJSynth: imlist.txt of ./<d>/<d>/<idx>_<LABEL>_<tag>.jpg paths."""
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/imgs")
-    lines, expected = [], []
-    for i in range(n_imgs):
-        label = rng.choice(_WORDS).upper()
-        rel = f"{i % 3}/{i}/{i}_{label}_{rng.randrange(10000)}.jpg"
-        _mkdirs(os.path.dirname(f"{root}/imgs/{rel}"))
-        _touch(f"{root}/imgs/{rel}")
-        lines.append(f"./{rel}")
-        expected.append({"img_path": f"{root}/imgs/{rel}", "label": label})
-    with open(f"{root}/imlist.txt", "w") as f:
-        f.write("\n".join(lines) + "\n")
-    return expected
-
-
-def fabricate_imgur5k(root: str, n_imgs: int = 3, seed: int = 11) -> list[dict]:
-    """IMGUR5K: ONE label json (index_to_ann_map + ann_id); axis-aligned
-    angles so expected corners stay exact; includes a '.' placeholder."""
-    import math
-
-    rng = random.Random(seed)
-    _mkdirs(f"{root}/images")
-    idx_map, ann_map = {}, {}
-    expected = []
-    aid = 0
-    for i in range(n_imgs):
-        img_id = f"im{i:03d}"
-        words = _gen_words(rng, 2)
-        ids = []
-        exp_boxes, exp_labels = [], []
-        for t, (x0, y0, x1, y1) in words:
-            aid += 1
-            ids.append(f"a{aid}")
-            xc, yc = (x0 + x1) / 2, (y0 + y1) / 2
-            w, h = x1 - x0, y1 - y0
-            ang = rng.choice([0.0, 30.0])
-            ann_map[f"a{aid}"] = {
-                "word": t,
-                "bounding_box": f"[{xc}, {yc}, {w}, {h}, {ang}]",
-            }
-            r = math.radians(ang)
-            cs, sn = math.cos(r), math.sin(r)
-            corners = [
-                [xc + sx * w / 2 * cs - sy * h / 2 * sn, yc + sx * w / 2 * sn + sy * h / 2 * cs]
-                for sx, sy in [(-1, -1), (1, -1), (1, 1), (-1, 1)]
-            ]
-            exp_boxes.append(corners)
-            exp_labels.append(t)
-        aid += 1
-        ids.append(f"a{aid}")
-        ann_map[f"a{aid}"] = {"word": ".", "bounding_box": "[1, 1, 1, 1, 0]"}
-        idx_map[img_id] = ids
-        _touch(f"{root}/images/{img_id}.jpg")
-        expected.append(
-            {"img_path": f"{root}/images/{img_id}.jpg", "boxes": exp_boxes, "labels": exp_labels}
-        )
-    with open(f"{root}/labels.json", "w") as f:
-        json.dump({"index_to_ann_map": idx_map, "ann_id": ann_map}, f)
-    return expected
-
-
 def fabricate_ocr_rendered(root: str, n_imgs: int = 5, seed: int = 12) -> list[dict]:
     """OCRDataset archive whose images are REAL engine-rendered PNG pages:
     words drawn with the glyph font at the annotated boxes, so the full

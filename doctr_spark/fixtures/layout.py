@@ -11,9 +11,7 @@ layout unambiguously — see kernels/builder.py):
   apart, so row y-centers differ by more than median_height/2 -> distinct
   visual rows;
 * the intra-row word gap (WORD_GAP px) stays below the builder's adaptive
-  break distance, so a visual row is one line;
-* an explicit column gap (>= PARAGRAPH_BREAK * PAGE_W px) splits a row into
-  sub-lines, matching `_resolve_sub_lines` semantics.
+  break distance, so a visual row is one line.
 """
 
 from __future__ import annotations
@@ -112,42 +110,3 @@ def layout_paragraphs(
     flush_row()
     return pages
 
-
-def layout_two_columns(
-    left: list[str],
-    right: list[str],
-    page_h: int = PAGE_H,
-    page_w: int = PAGE_W,
-) -> PageLayout:
-    """A single two-column page: each visual row holds a left-column word run
-    and a right-column word run separated by a gap wide enough that the
-    builder splits the row into two sub-lines (left first, then right)."""
-    page = PageLayout(canvas=np.zeros((page_h, page_w), dtype=np.uint8))
-    # the column gap must exceed the builder's max break distance
-    # (paragraph_break * page_w) so the sub-line split always triggers
-    col_gap = 2 * MARGIN
-    col_w = (page_w - 2 * MARGIN - col_gap) // 2
-    col_x = [MARGIN, MARGIN + col_w + col_gap]
-    cols = [list(left), list(right)]
-    y = MARGIN
-    while any(cols) and y + GLYPH_H <= page_h - MARGIN:
-        row_parts: list[list[str]] = [[], []]
-        for ci in (0, 1):
-            x = col_x[ci]
-            limit = col_x[ci] + col_w
-            while cols[ci]:
-                word = cols[ci][0][: col_w // GLYPH_W - 1]
-                w = word_width(word)
-                if x + w > limit:
-                    break
-                box = draw_word(page.canvas, x, y, word)
-                page.words.append((word, box))
-                row_parts[ci].append(word)
-                cols[ci].pop(0)
-                x += w + WORD_GAP
-        # sub-line split emits left run then right run as separate lines
-        for part in row_parts:
-            if part:
-                page.rows.append(part)
-        y += _ROW_PITCH
-    return page

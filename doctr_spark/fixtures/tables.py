@@ -8,7 +8,7 @@ from dataclasses import dataclass
 
 import numpy as np
 
-from ..config import GLYPH_H, MARGIN, PAGE_H, PAGE_W, RULING_INK, TABLE_CELL_H, WORD_GAP
+from ..config import MARGIN, PAGE_H, PAGE_W, RULING_INK, TABLE_CELL_H, WORD_GAP
 from ..kernels.glyphs import draw_word, word_width
 
 

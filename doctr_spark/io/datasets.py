@@ -3,8 +3,8 @@
 The reference ships one Python class per public OCR dataset that walks the
 extracted archive on a single machine, parses per-image annotation files,
 and yields (image, target) pairs (`doctr/datasets/funsd.py:1-124`,
-`cord.py:1-133`, `sroie.py:1-113`, `detection.py:1-100`,
-`recognition.py:1-57`, `ocr.py:1-71`). Here each loader is a DataFrame
+`cord.py:1-133`, `sroie.py:1-113`, `ocr.py:1-71`, `svhn.py`,
+`synthtext.py`, `iiit5k.py`). Here each loader is a DataFrame
 reader over the same on-disk annotation formats: annotation parsing runs
 distributed (`spark.read.json` / wholetext + `from_json`, all native
 expressions — no Python UDFs), images stay referenced by path so a
@@ -17,8 +17,7 @@ Every loader returns one row per image:
     boxes:    array<array<double>>
                                -- [xmin,ymin,xmax,ymax] per word, or the 4
                                   [x,y] corners when use_polygons=True
-    labels:   array<string>   -- per-box word transcriptions (or polygon
-                                  class names for the detection format)
+    labels:   array<string>   -- per-box word transcriptions
 
 matching the reference target contract `dict(boxes=..., labels=...)`.
 Missing-image existence checks are a join against the image listing at
@@ -30,10 +29,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 from pyspark.sql import types as T  # noqa: N812
-
-# the reference's single-class marker for list-form detection labels
-# (doctr/file_utils.py:11)
-CLASS_NAME = "words"
 
 
 def _stem(col: Column) -> Column:
@@ -252,94 +247,6 @@ def load_sroie(
     return _assemble(words, use_polygons=False)
 
 
-_POLY = T.ArrayType(T.ArrayType(T.ArrayType(T.DoubleType())))  # (N, 4, 2)
-
-
-def load_detection_dataset(
-    spark: SparkSession, img_folder: str, label_path: str, use_polygons: bool = False
-) -> DataFrame:
-    """DetectionDataset: ONE labels.json mapping img name -> {"polygons":
-    list | {class: list}} (reference `doctr/datasets/detection.py:56-93`).
-    Both label shapes parse natively: the file is read wholetext and
-    `from_json` is applied twice (list-form and dict-form schemas), the
-    non-null parse winning per image. `labels` carries the per-polygon
-    class name (the reference's single-class marker for list form)."""
-    list_schema = T.MapType(
-        T.StringType(), T.StructType([T.StructField("polygons", _POLY)])
-    )
-    dict_schema = T.MapType(
-        T.StringType(),
-        T.StructType([T.StructField("polygons", T.MapType(T.StringType(), _POLY))]),
-    )
-    raw = spark.read.text(label_path, wholetext=True)
-    per_img = raw.select(
-        F.explode(F.from_json("value", list_schema)).alias("img_name", "as_list"),
-    ).join(
-        raw.select(F.explode(F.from_json("value", dict_schema)).alias("img_name", "as_dict")),
-        "img_name",
-        "left",
-    )
-    # dict-form polygons flatten to (class, polygon) pairs; list form tags
-    # every polygon with the reference's CLASS_NAME
-    pairs = per_img.select(
-        "img_name",
-        F.when(
-            F.col("as_list.polygons").isNotNull(),
-            F.transform(
-                "as_list.polygons", lambda p: F.struct(F.lit(CLASS_NAME).alias("cls"), p.alias("poly"))
-            ),
-        )
-        .otherwise(
-            F.flatten(
-                F.transform(
-                    F.map_entries("as_dict.polygons"),
-                    lambda e: F.transform(
-                        e["value"], lambda p: F.struct(e["key"].alias("cls"), p.alias("poly"))
-                    ),
-                )
-            )
-        )
-        .alias("ps"),
-    )
-    geom = (
-        (lambda p: p)
-        if use_polygons
-        else (
-            lambda p: F.array(
-                F.array_min(F.transform(p, lambda c: c[0])),
-                F.array_min(F.transform(p, lambda c: c[1])),
-                F.array_max(F.transform(p, lambda c: c[0])),
-                F.array_max(F.transform(p, lambda c: c[1])),
-            )
-        )
-    )
-    return pairs.select(
-        F.concat(F.lit(f"{img_folder}/"), F.col("img_name")).alias("img_path"),
-        F.transform("ps", lambda s: geom(s["poly"])).alias("boxes"),
-        F.transform("ps", lambda s: s["cls"]).alias("labels"),
-    )
-
-
-def load_recognition_dataset(
-    spark: SparkSession, img_folder: str, labels_path: str
-) -> DataFrame:
-    """RecognitionDataset: ONE labels.json mapping crop image name -> label
-    string (reference `doctr/datasets/recognition.py:31-47`). Returns
-    (img_path, label) rows."""
-    return (
-        spark.read.text(labels_path, wholetext=True)
-        .select(
-            F.explode(F.from_json("value", T.MapType(T.StringType(), T.StringType()))).alias(
-                "img_name", "label"
-            )
-        )
-        .select(
-            F.concat(F.lit(f"{img_folder}/"), F.col("img_name")).alias("img_path"),
-            "label",
-        )
-    )
-
-
 def load_ocr_dataset(
     spark: SparkSession, img_folder: str, label_file: str, use_polygons: bool = False
 ) -> DataFrame:
@@ -377,237 +284,6 @@ def load_ocr_dataset(
             F.transform("ann.typed_words", lambda w: w["value"]).alias("labels"),
         )
     )
-
-
-_SVT_RECT = T.StructType(
-    [
-        T.StructField("_x", T.DoubleType()),
-        T.StructField("_y", T.DoubleType()),
-        T.StructField("_width", T.DoubleType()),
-        T.StructField("_height", T.DoubleType()),
-        T.StructField("tag", T.StringType()),
-    ]
-)
-_SVT_SCHEMA = T.StructType(
-    [
-        T.StructField("imageName", T.StringType()),
-        T.StructField(
-            "taggedRectangles",
-            T.StructType([T.StructField("taggedRectangle", T.ArrayType(_SVT_RECT))]),
-        ),
-    ]
-)
-
-
-def load_svt(
-    spark: SparkSession, root: str, train: bool = True, use_polygons: bool = False
-) -> DataFrame:
-    """SVT: one train.xml/test.xml, <image> elements with taggedRectangle
-    (x, y, width, height) attributes and a <tag> label (reference
-    `doctr/datasets/svt.py:68-120`, ElementTree walk re-expressed on the
-    native XML source with rowTag=image)."""
-    path = f"{root}/svt1/{'train' if train else 'test'}.xml"
-    imgs = (
-        spark.read.format("xml")
-        .option("rowTag", "image")
-        .schema(_SVT_SCHEMA)
-        .load(path)
-    )
-    rect_box = lambda r: F.array(r["_x"], r["_y"], r["_x"] + r["_width"], r["_y"] + r["_height"])  # noqa: E731
-    return imgs.select(
-        F.concat(F.lit(f"{root}/svt1/"), F.col("imageName")).alias("img_path"),
-        F.transform(
-            "taggedRectangles.taggedRectangle",
-            lambda r: _xyxy_to_corners(rect_box(r)) if use_polygons else rect_box(r),
-        ).alias("boxes"),
-        F.transform("taggedRectangles.taggedRectangle", lambda r: r["tag"]).alias("labels"),
-    )
-
-
-def load_ic13(
-    spark: SparkSession,
-    img_folder: str,
-    label_folder: str,
-    use_polygons: bool = False,
-    img_ext: str = ".png",
-) -> DataFrame:
-    """IC13: per-image `gt_<stem>.txt`, rows of 4 int coords then a quoted
-    transcription, comma- or space-delimited (reference
-    `doctr/datasets/ic13.py:75-100` strips trailing commas per field and
-    the surrounding quotes)."""
-    rx = r'^\s*(\d+),?\s+(\d+),?\s+(\d+),?\s+(\d+),?\s+"?(.*?)"?\s*$'
-    lines = (
-        spark.read.text(f"{label_folder}/gt_*.txt", wholetext=True)
-        .withColumn("stem", F.regexp_extract(F.input_file_name(), r"gt_([^/]+)\.txt$", 1))
-        .select("stem", F.posexplode(F.split("value", "\n")).alias("ord", "row"))
-        .where(F.col("row").rlike(rx))  # malformed rows quarantine, not crash
-    )
-    box = F.array(*[F.regexp_extract("row", rx, i).cast("double") for i in range(1, 5)])
-    words = lines.select(
-        F.concat(F.lit(f"{img_folder}/"), F.col("stem"), F.lit(img_ext)).alias("img_path"),
-        F.col("ord").cast("long").alias("ord"),
-        box.alias("box"),
-        F.regexp_extract("row", rx, 5).alias("label"),
-    )
-    return _assemble(words, use_polygons)
-
-
-_WILD_SCHEMA = T.StructType(
-    [
-        T.StructField("file_name", T.StringType()),
-        T.StructField(
-            "annotations",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("box", T.ArrayType(T.DoubleType())),
-                        T.StructField("text", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-    ]
-)
-
-
-def load_wildreceipt(
-    spark: SparkSession, img_folder: str, label_path: str, use_polygons: bool = False
-) -> DataFrame:
-    """WildReceipt: a JSON-lines label file, one record per image with
-    8-coord word boxes (reference `doctr/datasets/wildreceipt.py:80-115`).
-    JSONL is Spark's native json layout — the whole parse is one schema'd
-    read."""
-    ann = spark.read.schema(_WILD_SCHEMA).json(label_path)
-    xs = lambda b: F.array(b[0], b[2], b[4], b[6])  # noqa: E731
-    ys = lambda b: F.array(b[1], b[3], b[5], b[7])  # noqa: E731
-    corners = lambda b: F.array(  # noqa: E731
-        F.array(b[0], b[1]), F.array(b[2], b[3]), F.array(b[4], b[5]), F.array(b[6], b[7])
-    )
-    straight = lambda b: F.array(  # noqa: E731
-        F.array_min(xs(b)), F.array_min(ys(b)), F.array_max(xs(b)), F.array_max(ys(b))
-    )
-    geom = corners if use_polygons else straight
-    return ann.select(
-        F.concat(F.lit(f"{img_folder}/"), F.col("file_name")).alias("img_path"),
-        F.transform("annotations", lambda a: geom(a["box"])).alias("boxes"),
-        F.transform("annotations", lambda a: a["text"]).alias("labels"),
-    )
-
-
-_COCO_IMG = T.MapType(
-    T.StringType(),
-    T.StructType([T.StructField("file_name", T.StringType()), T.StructField("set", T.StringType())]),
-)
-_COCO_ANN = T.MapType(
-    T.StringType(),
-    T.StructType(
-        [
-            T.StructField("image_id", T.LongType()),
-            T.StructField("legibility", T.StringType()),
-            T.StructField("bbox", T.ArrayType(T.DoubleType())),
-            T.StructField("utf8_string", T.StringType()),
-        ]
-    ),
-)
-
-
-def load_coco_text(
-    spark: SparkSession, img_folder: str, label_path: str, train: bool = True, use_polygons: bool = False
-) -> DataFrame:
-    """COCO-Text: ONE label json with `imgs` and `anns` maps joined on
-    image_id, keeping legible annotations in the requested split
-    (reference `doctr/datasets/coco_text.py:77-135`). The two maps explode
-    to DataFrames and the id match is a real join — at full-dataset scale
-    the ann side shuffles on image_id instead of scanning per image."""
-    raw = spark.read.text(label_path, wholetext=True)
-    raw = raw.select(
-        F.from_json(F.get_json_object("value", "$.imgs"), _COCO_IMG).alias("imgs"),
-        F.from_json(F.get_json_object("value", "$.anns"), _COCO_ANN).alias("anns"),
-    )
-    imgs = raw.select(F.explode("imgs").alias("img_id", "img")).where(
-        (F.col("img.set") == "train") == F.lit(train)
-    )
-    anns = raw.select(F.explode("anns").alias("ann_id", "ann")).where(
-        F.col("ann.legibility") == "legible"
-    )
-    b = F.col("ann.bbox")
-    box = F.array(b[0], b[1], b[0] + b[2], b[1] + b[3])
-    words = anns.select(
-        F.col("ann.image_id").cast("string").alias("img_id"),
-        F.col("ann_id").cast("long").alias("ord"),
-        (_xyxy_to_corners(box) if use_polygons else box).alias("box"),
-        F.col("ann.utf8_string").alias("label"),
-    ).join(
-        imgs.select("img_id", F.concat(F.lit(f"{img_folder}/"), F.col("img.file_name")).alias("img_path")),
-        "img_id",
-    )
-    # reference floors boxes to int and clips at 0
-    words = words.select(
-        "img_path",
-        "ord",
-        F.transform("box", lambda v: F.greatest(v.cast("bigint").cast("double"), F.lit(0.0))).alias("box"),
-        "label",
-    )
-    return _assemble(words, use_polygons=False)
-
-
-def load_mjsynth(spark: SparkSession, img_folder: str, label_path: str) -> DataFrame:
-    """MJSynth: pure recognition; imlist.txt holds relative image paths and
-    the label is the middle filename segment `<idx>_<LABEL>_<tag>.jpg`
-    (reference `doctr/datasets/mjsynth.py:93-106`)."""
-    return (
-        spark.read.text(label_path)
-        .where(F.length(F.trim("value")) > 0)
-        .select(
-            F.concat(F.lit(f"{img_folder}/"), F.regexp_replace(F.trim("value"), r"^\./", "")).alias(
-                "img_path"
-            ),
-            F.regexp_extract(F.trim("value"), r"[^/]*_([^_/]+)_[^_/]*$", 1).alias("label"),
-        )
-    )
-
-
-_IMGUR_MAP = T.MapType(T.StringType(), T.ArrayType(T.StringType()))
-_IMGUR_ANN = T.MapType(
-    T.StringType(),
-    T.StructType(
-        [T.StructField("word", T.StringType()), T.StructField("bounding_box", T.StringType())]
-    ),
-)
-
-
-def load_imgur5k(
-    spark: SparkSession, img_folder: str, label_path: str, img_ext: str = ".jpg"
-) -> DataFrame:
-    """IMGUR5K: ONE label json with `index_to_ann_map` (img -> ann ids) and
-    `ann_id` (id -> word + "[xc, yc, w, h, angle]" string); '.' words are
-    unannotated placeholders (reference `doctr/datasets/imgur5k.py:97-125`).
-    The rotated box decodes to 4 corners with native trig (cv2.boxPoints
-    re-expressed; angle in degrees, y down)."""
-    raw = spark.read.text(label_path, wholetext=True).select(
-        F.from_json(F.get_json_object("value", "$.index_to_ann_map"), _IMGUR_MAP).alias("idx"),
-        F.from_json(F.get_json_object("value", "$.ann_id"), _IMGUR_ANN).alias("ann"),
-    )
-    pairs = raw.select(F.explode("idx").alias("img_id", "ann_ids"), "ann").select(
-        "img_id", F.posexplode("ann_ids").alias("ord", "aid"), "ann"
-    )
-    w = F.element_at("ann", F.col("aid"))
-    nums = F.split(F.regexp_replace(w["bounding_box"], r"[\[\] ]", ""), ",")
-    c = [nums[i].cast("double") for i in range(5)]
-    xc, yc, bw, bh, ang = c
-    rad = F.radians(ang)
-    cosr, sinr = F.cos(rad), F.sin(rad)
-    dx, dy = bw / 2, bh / 2
-    corner = lambda sx, sy: F.array(  # noqa: E731
-        xc + sx * dx * cosr - sy * dy * sinr, yc + sx * dx * sinr + sy * dy * cosr
-    )
-    words = pairs.where(w["word"] != ".").select(
-        F.concat(F.lit(f"{img_folder}/"), F.col("img_id"), F.lit(img_ext)).alias("img_path"),
-        F.col("ord").cast("long").alias("ord"),
-        F.array(corner(-1, -1), corner(1, -1), corner(1, 1), corner(-1, 1)).alias("box"),
-        w["word"].alias("label"),
-    )
-    return _assemble(words, use_polygons=False)
 
 
 def load_svhn(

@@ -107,37 +107,6 @@ def page_from_dict(d: dict[str, Any]) -> dict[str, Any]:
     }
 
 
-# the reference Prediction element extends Word without crop orientation
-# (doctr/io/elements.py:138-159)
-PREDICTION_KEYS = ("value", "confidence", "geometry", "objectness_score")
-KIE_PAGE_KEYS = ("page_idx", "dimensions", "predictions")
-
-
-def prediction_from_dict(d: dict[str, Any]) -> dict[str, Any]:
-    _require(d, PREDICTION_KEYS, "Prediction")
-    return {
-        "value": str(d["value"]),
-        "confidence": float(d["confidence"]),
-        "geometry": [float(v) for v in d["geometry"]],
-        "objectness_score": float(d["objectness_score"]),
-    }
-
-
-def kie_page_from_dict(d: dict[str, Any]) -> dict[str, Any]:
-    """``KIEPage.from_dict`` analogue (`doctr/io/elements.py:592-605`):
-    rebuild the per-class prediction lists, preserving each class's
-    reading order."""
-    _require(d, KIE_PAGE_KEYS, "KIEPage")
-    return {
-        "page_idx": int(d["page_idx"]),
-        "dimensions": [int(v) for v in d["dimensions"]],
-        "predictions": {
-            str(cls): [prediction_from_dict(p) for p in preds]
-            for cls, preds in d["predictions"].items()
-        },
-    }
-
-
 def render_page_dict(page: dict[str, Any], include_furniture: bool = True) -> str:
     """Re-render a (re-imported) page dict to its text — the same block
     fold + trailing table TSVs the builder produced (`build_page`), so a

@@ -19,11 +19,6 @@ def bbox_to_polygon(box: np.ndarray) -> np.ndarray:
     return np.array([[x0, y0], [x1, y0], [x1, y1], [x0, y1]], dtype=float)
 
 
-def polygon_to_bbox(poly: np.ndarray) -> np.ndarray:
-    """4x2 polygon -> enclosing straight box (`geometry.py:76-88`)."""
-    return np.concatenate([poly.min(axis=0), poly.max(axis=0)])
-
-
 def order_points(pts: np.ndarray) -> np.ndarray:
     """Order 4 points TL, TR, BR, BL by the sum/diff heuristic
     (`geometry.py:33-55`)."""
@@ -34,20 +29,6 @@ def order_points(pts: np.ndarray) -> np.ndarray:
     tr = pts[np.argmin(d)]
     bl = pts[np.argmax(d)]
     return np.stack([tl, tr, br, bl])
-
-
-def convert_to_relative_coords(boxes: np.ndarray, shape: tuple[int, int]) -> np.ndarray:
-    """Absolute pixel geometry -> page-relative [0, 1]
-    (`geometry.py:480-502`). shape = (height, width)."""
-    h, w = shape
-    boxes = boxes.astype(np.float64).copy()
-    if boxes.ndim == 3:  # (N, 4, 2) polygons
-        boxes[..., 0] /= w
-        boxes[..., 1] /= h
-    else:  # (N, 4) straight
-        boxes[:, [0, 2]] /= w
-        boxes[:, [1, 3]] /= h
-    return np.clip(boxes, 0.0, 1.0)
 
 
 def rotate_boxes(
@@ -83,25 +64,6 @@ def estimate_page_angle(polys: np.ndarray) -> float:
     edges = polys[:, 1] - polys[:, 0]  # TR - TL
     angles = np.rad2deg(np.arctan2(-edges[:, 1], edges[:, 0]))
     return float(np.median(angles))
-
-
-def nms(boxes: np.ndarray, scores: np.ndarray, thresh: float = 0.5) -> list[int]:
-    """Greedy non-maximum suppression (`doctr/utils/metrics.py:184-219`):
-    keep boxes in descending score order, suppressing any remaining box
-    whose IoU with a kept box exceeds ``thresh``. Returns kept indices."""
-    if boxes.shape[0] == 0:
-        return []
-    order = np.argsort(-scores, kind="stable")
-    iou = box_iou(boxes, boxes)
-    keep: list[int] = []
-    suppressed = np.zeros(boxes.shape[0], dtype=bool)
-    for i in order:
-        i = int(i)
-        if suppressed[i]:
-            continue
-        keep.append(i)
-        suppressed |= iou[i] > thresh
-    return keep
 
 
 def box_iou(a: np.ndarray, b: np.ndarray) -> np.ndarray:

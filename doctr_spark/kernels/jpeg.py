@@ -25,8 +25,7 @@ the needed subset of the PUBLIC spec is implemented from scratch:
   Annex G decode path against the baseline pipeline bit-for-bit.
 * Arithmetic coding (SOF9+), lossless, hierarchical and 12-bit
   precision reject LOUDLY — the disclosed-gate contract; the swap-in
-  seam for a full library remains `operators.multimodal.decode_media` /
-  the PDF ``DCTDecode`` branch.
+  seam for a full library remains the PDF ``DCTDecode`` branch.
 
 At 100 TB these decodes run inside Arrow-batched ``mapInPandas`` workers
 (one image per row, no driver involvement); the per-image pure-Python

@@ -21,8 +21,6 @@ import numpy as np
 
 from .builder import sort_boxes
 
-KIE_CLASSES = ("number", "alpha", "mixed")
-
 
 def classify_token(value: str) -> str:
     if value.isdigit():

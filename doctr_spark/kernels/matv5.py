@@ -171,11 +171,6 @@ def loadmat_bytes(data: bytes) -> dict[str, Any]:
     return out
 
 
-def loadmat(path: str) -> dict[str, Any]:
-    with open(path, "rb") as f:
-        return loadmat_bytes(f.read())
-
-
 # ---------------------------------------------------------------------------
 # writer (fixture fabrication; same subset)
 # ---------------------------------------------------------------------------

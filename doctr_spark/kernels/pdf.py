@@ -93,7 +93,6 @@ from ..config import GLYPH_H, GLYPH_W
 
 BASE_FONT_SIZE = 12  # Tf size that renders the glyph font at scale 1
 
-_OBJ_RE = re.compile(rb"(\d+)\s+0\s+obj(.*?)endobj", re.DOTALL)
 _STREAM_RE = re.compile(rb"stream\r?\n")
 _REF_RE = re.compile(rb"(\d+)\s+0\s+R")
 # a string object (§7.3.4): literal (…) with escapes, or hex <…>
@@ -161,12 +160,6 @@ def _str_raw(tok: bytes) -> bytes:
     if len(hx) % 2:
         hx += b"0"
     return binascii.unhexlify(hx)
-
-
-def _str_token(tok: bytes) -> str:
-    """`_str_raw` under the latin-1 identity — the unencoded-simple-font
-    reading (and the historical default)."""
-    return _str_raw(tok).decode("latin-1")
 
 
 def _fmt_num(v: float) -> str:

@@ -1,13 +1,14 @@
 """Minimal pure-stdlib PNG codec (grayscale, 8-bit).
 
-Real transcript payloads pack page images as PNG; this closes the
-`decode_media` stub for "image/png" without adding dependencies — the
-format is public (RFC 2083 / W3C PNG spec): zlib-inflated scanlines, one
-filter byte per row, filters 0-4 (None/Sub/Up/Average/Paeth). The encoder
-writes Up-filtered rows (great on sparse page rasters, and the defilter
-is a vectorized row recurrence, so PNG-packed pages decode at production
-speed); Sub/Average/Paeth reconstruction — serial in x — is fully
-supported for foreign streams and pinned by an all-filters test.
+Real transcript payloads pack page images as PNG; this decodes them
+(`imgcodec.decode_page` sniffs the signature) without adding
+dependencies — the format is public (RFC 2083 / W3C PNG spec):
+zlib-inflated scanlines, one filter byte per row, filters 0-4
+(None/Sub/Up/Average/Paeth). The encoder writes Up-filtered rows (great
+on sparse page rasters, and the defilter is a vectorized row recurrence,
+so PNG-packed pages decode at production speed); Sub/Average/Paeth
+reconstruction — serial in x — is fully supported for foreign streams
+and pinned by an all-filters test.
 Reference analogue: `DocumentFile.from_images` accepting PNG bytes
 (`doctr/io/image/base.py:16-54`, cv2.imdecode there).
 """

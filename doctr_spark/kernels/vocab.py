@@ -181,47 +181,3 @@ def decode_sequence(indices, vocab: str = DEFAULT_VOCAB) -> str:
     """Map vocab indices back to a string (reference `datasets/utils.py:99-119`)."""
     return "".join(vocab[int(i)] for i in indices)
 
-
-def encode_sequences(
-    sequences: list[str],
-    vocab: str = DEFAULT_VOCAB,
-    target_size: int | None = None,
-    eos: int = -1,
-    sos: int | None = None,
-    pad: int | None = None,
-    dynamic_seq_length: bool = False,
-):
-    """Batch-encode strings to a fixed-width index matrix with EOS/SOS/PAD
-    (reference `datasets/utils.py:122-179` semantics: pad symbol implies an
-    EOS appended to every sequence first; SOS rolls the matrix right)."""
-    import numpy as np
-
-    if 0 <= eos < len(vocab):
-        raise ValueError("eos must lie outside the vocab index range")
-    if not isinstance(target_size, int) or dynamic_seq_length:
-        max_length = max(len(w) for w in sequences) + 1
-        if isinstance(sos, int):
-            max_length += 1
-        if isinstance(pad, int):
-            max_length += 1
-        target_size = max_length if not isinstance(target_size, int) else min(max_length, target_size)
-
-    if isinstance(pad, int):
-        if 0 <= pad < len(vocab):
-            raise ValueError("pad must lie outside the vocab index range")
-        default_symbol = pad
-    else:
-        default_symbol = eos
-    out = np.full((len(sequences), target_size), default_symbol, dtype=np.int32)
-    for i, s in enumerate(sequences):
-        seq = encode_string(s, vocab)
-        if isinstance(pad, int):
-            seq = [*seq, eos]
-        n = min(len(seq), target_size)
-        out[i, :n] = seq[:n]
-    if isinstance(sos, int):
-        if 0 <= sos < len(vocab):
-            raise ValueError("sos must lie outside the vocab index range")
-        out = np.roll(out, 1)
-        out[:, 0] = sos
-    return out

@@ -388,11 +388,6 @@ def polygon_iou_events(spark, sf_dir: str) -> DataFrame:
     return boxed.mapInPandas(fn, POLY_IOU_SCHEMA).where(F.col("iou") > 0)
 
 
-# identical arithmetic to BOX_IOU_ORACLE: a rigid rotation of both boxes
-# preserves their IoU exactly, so the straight-box formula IS the oracle
-POLY_IOU_ORACLE = BOX_IOU_ORACLE
-
-
 def geometry_iou_events(spark, sf_dir: str) -> DataFrame:
     """Both IoU primitives in one driver slot (the driver caps correctness
     rows at 50 queries): the native-expression straight-box IoU and the

@@ -376,22 +376,6 @@ ORACLES: dict[str, str] = {
 }
 
 
-def embedding_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semantic-dedup CLUSTERS: connected components over the
-    embedding-cosine near-dup pair graph (:func:`embedding_near_dups`),
-    labeling every member with its component-minimum vec_id — the
-    keep-one-canonical structure an embedding-level dedup pass acts on.
-    Reuses the O(log n)-round large-star/small-star kernel
-    (`operators.dedup.connected_components`), so the clustering holds at
-    corpus scale regardless of component shape."""
-    pairs = embedding_near_dups(spark, sf_dir)
-    edges = pairs.select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-    labels, _ = connected_components(edges)
-    return labels.select(
-        F.col("doc_id").alias("vec_id"), F.col("cluster_id").alias("cluster_id")
-    )
-
-
 def near_dup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs AND their connected-component clusters in one driver
     slot (the driver caps correctness rows at 50 queries): the LSH-bucketed

@@ -4,6 +4,8 @@ tests/pytorch/test_datasets_pt.py)."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from doctr_spark.fixtures import archives
@@ -58,49 +60,25 @@ def test_sroie_loader_keeps_commas_and_order(spark, tmp_path):
     assert any("," in lbl for r in expected.values() for lbl in r["labels"])
 
 
-def test_detection_dataset_both_label_shapes(spark, tmp_path):
-    root = str(tmp_path / "det")
-    expected = _by_img(archives.fabricate_detection(root))
-    got = _collect(ds.load_detection_dataset(spark, f"{root}/images", f"{root}/labels.json"))
-    assert set(got) == set(expected)
-    for p, exp in expected.items():
-        assert got[p]["labels"] == exp["labels"]
-        assert [list(b) for b in got[p]["boxes"]] == exp["boxes"]
-    # both the list form ('words') and the dict form (explicit classes) parsed
-    all_classes = {c for r in got.values() for c in r["labels"]}
-    assert "words" in all_classes and {"title", "body"} <= all_classes
-
-
-def test_detection_dataset_polygons(spark, tmp_path):
-    root = str(tmp_path / "det")
-    expected = _by_img(archives.fabricate_detection(root))
-    got = _collect(
-        ds.load_detection_dataset(spark, f"{root}/images", f"{root}/labels.json", use_polygons=True)
-    )
-    for p, exp in expected.items():
-        for poly, (x0, y0, x1, y1) in zip(got[p]["boxes"], exp["boxes"]):
-            assert [list(c) for c in poly] == [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]
-
-
-def test_recognition_dataset(spark, tmp_path):
-    root = str(tmp_path / "reco")
-    expected = archives.fabricate_recognition(root)
-    got = {r["img_path"]: r["label"] for r in ds.load_recognition_dataset(
-        spark, f"{root}/crops", f"{root}/labels.json"
-    ).collect()}  # fmt: skip
-    assert got == {e["img_path"]: e["label"] for e in expected}
-
-
 def test_ocr_dataset_keeps_empty_images(spark, tmp_path):
-    root = str(tmp_path / "ocr")
-    expected = _by_img(archives.fabricate_ocr(root))
-    got = _collect(ds.load_ocr_dataset(spark, f"{root}/images", f"{root}/labels.json"))
-    assert set(got) == set(expected)
-    empties = [p for p, e in expected.items() if not e["labels"]]
-    assert empties and all(got[p]["boxes"] == [] and got[p]["labels"] == [] for p in empties)
-    for p, exp in expected.items():
-        assert got[p]["labels"] == exp["labels"]
-        assert [list(b) for b in got[p]["boxes"]] == exp["boxes"]
+    labels = {
+        "scan_000.png": {"typed_words": [
+            {"geometry": [1.0, 2.0, 30.0, 12.0, 0.9], "value": "total"},
+            {"geometry": [40.0, 2.0, 80.0, 12.0], "value": "date"},
+        ]},
+        "scan_001.png": {"typed_words": []},
+    }  # fmt: skip
+    (tmp_path / "labels.json").write_text(json.dumps(labels))
+    img = str(tmp_path / "images")
+    got = _collect(ds.load_ocr_dataset(spark, img, str(tmp_path / "labels.json")))
+    assert got == {
+        f"{img}/scan_000.png": {
+            "img_path": f"{img}/scan_000.png",
+            "boxes": [[1.0, 2.0, 30.0, 12.0], [40.0, 2.0, 80.0, 12.0]],
+            "labels": ["total", "date"],
+        },
+        f"{img}/scan_001.png": {"img_path": f"{img}/scan_001.png", "boxes": [], "labels": []},
+    }
 
 
 @pytest.mark.parametrize("loader", ["funsd", "cord", "sroie"])
@@ -112,70 +90,6 @@ def test_loaders_are_deterministic(spark, tmp_path, loader):
     a = sorted(map(str, fn(spark, root).collect()))
     b = sorted(map(str, fn(spark, root).collect()))
     assert a == b
-
-
-def test_svt_xml_loader(spark, tmp_path):
-    root = str(tmp_path / "svt")
-    expected = _by_img(archives.fabricate_svt(root))
-    got = _collect(ds.load_svt(spark, root, train=True))
-    assert set(got) == set(expected)
-    for p, exp in expected.items():
-        assert got[p]["labels"] == exp["labels"]
-        assert [list(b) for b in got[p]["boxes"]] == exp["boxes"]
-
-
-def test_ic13_loader(spark, tmp_path):
-    root = str(tmp_path / "ic13")
-    expected = _by_img(archives.fabricate_ic13(root))
-    got = _collect(ds.load_ic13(spark, f"{root}/images", f"{root}/gt"))
-    assert set(got) == set(expected)
-    for p, exp in expected.items():
-        assert got[p]["labels"] == exp["labels"]
-        assert [list(b) for b in got[p]["boxes"]] == exp["boxes"]
-
-
-def test_wildreceipt_jsonl_loader(spark, tmp_path):
-    root = str(tmp_path / "wild")
-    expected = _by_img(archives.fabricate_wildreceipt(root))
-    got = _collect(ds.load_wildreceipt(spark, f"{root}/images", f"{root}/train.txt"))
-    assert set(got) == set(expected)
-    for p, exp in expected.items():
-        assert got[p]["labels"] == exp["labels"]
-        assert [list(b) for b in got[p]["boxes"]] == exp["boxes"]
-
-
-def test_coco_text_split_and_legibility(spark, tmp_path):
-    root = str(tmp_path / "coco")
-    expected = _by_img(archives.fabricate_coco_text(root))
-    got = _collect(
-        ds.load_coco_text(spark, f"{root}/images", f"{root}/cocotext.json", train=True)
-    )
-    # the test-set image is absent, the illegible annotation dropped
-    assert set(got) == set(expected)
-    for p, exp in expected.items():
-        assert got[p]["labels"] == exp["labels"]
-        assert [list(b) for b in got[p]["boxes"]] == exp["boxes"]
-
-
-def test_mjsynth_filename_labels(spark, tmp_path):
-    root = str(tmp_path / "mj")
-    expected = archives.fabricate_mjsynth(root)
-    got = {r["img_path"]: r["label"] for r in ds.load_mjsynth(
-        spark, f"{root}/imgs", f"{root}/imlist.txt"
-    ).collect()}  # fmt: skip
-    assert got == {e["img_path"]: e["label"] for e in expected}
-
-
-def test_imgur5k_rotated_boxes(spark, tmp_path):
-    root = str(tmp_path / "imgur")
-    expected = _by_img(archives.fabricate_imgur5k(root))
-    got = _collect(ds.load_imgur5k(spark, f"{root}/images", f"{root}/labels.json"))
-    assert set(got) == set(expected)
-    for p, exp in expected.items():
-        assert got[p]["labels"] == exp["labels"]  # '.' placeholder dropped
-        for poly, exp_poly in zip(got[p]["boxes"], exp["boxes"]):
-            for c, ec in zip(poly, exp_poly):
-                assert list(c) == pytest.approx(ec, abs=1e-9)
 
 
 def test_loaders_tolerate_corrupt_annotation_files(spark, tmp_path):

@@ -98,30 +98,6 @@ def test_furniture_respected_on_rerender():
         assert bare == ""
 
 
-def test_kie_page_roundtrip_renders_identically():
-    import numpy as np
-
-    from doctr_spark.kernels.elements import kie_page_from_dict
-    from doctr_spark.kernels.kie import kie_build_page, render_kie_page
-
-    n = 8
-    rng = np.random.default_rng(3)
-    x0 = rng.uniform(0.05, 0.7, n)
-    y0 = np.sort(rng.uniform(0.05, 0.85, n))
-    boxes = np.stack([x0, y0, x0 + 0.1, y0 + 0.04], axis=1)
-    vals = ["12", "abc", "x9", "7", "de", "f!", "42", "ghi"]
-    page = kie_build_page(boxes, np.full(n, 0.9), vals, [0.8] * n, (200, 300))
-    rebuilt = kie_page_from_dict(json.loads(json.dumps(page)))
-    assert render_kie_page(rebuilt) == render_kie_page(page)
-    assert rebuilt["predictions"].keys() == page["predictions"].keys()
-    with pytest.raises(KeyError, match="Prediction.from_dict"):
-        bad = json.loads(json.dumps(page))
-        del next(iter(bad["predictions"].values()))[0]["geometry"]
-        kie_page_from_dict(bad)
-    with pytest.raises(KeyError, match="KIEPage.from_dict"):
-        kie_page_from_dict({"page_idx": 0})
-
-
 def test_synthesize_page_is_inverse_of_extraction():
     """synthesize_page (reference reconstitution.py:128-279) re-draws an
     exported page at its word geometry; detecting + recognizing the

@@ -1,6 +1,6 @@
 import numpy as np
 
-from doctr_spark.fixtures.layout import layout_paragraphs, layout_two_columns
+from doctr_spark.fixtures.layout import layout_paragraphs
 from doctr_spark.fixtures.payloads import (
     decode_payload,
     html_to_paragraphs,
@@ -46,8 +46,6 @@ def test_img_pdf_payload_roundtrip():
 def test_layout_gt_structure():
     pages = layout_paragraphs([["a", "b"], ["c"]])
     assert pages[0].gt_text == "a b\nc"
-    tc = layout_two_columns(["l1", "l2"], ["r1", "r2"])
-    assert tc.gt_text.splitlines()[0] == "l1 l2"
 
 
 def test_generator_deterministic_and_skewed():

@@ -3,10 +3,8 @@ import numpy as np
 from doctr_spark.kernels.geometry import (
     bbox_to_polygon,
     box_iou,
-    convert_to_relative_coords,
     estimate_page_angle,
     order_points,
-    polygon_to_bbox,
     rotate_boxes,
 )
 
@@ -15,19 +13,14 @@ def test_bbox_polygon_roundtrip():
     box = np.array([0.1, 0.2, 0.4, 0.3])
     poly = bbox_to_polygon(box)
     assert poly.shape == (4, 2)
-    assert np.allclose(polygon_to_bbox(poly), box)
+    assert np.allclose(poly, [[0.1, 0.2], [0.4, 0.2], [0.4, 0.3], [0.1, 0.3]])
+    assert np.allclose(np.concatenate([poly.min(axis=0), poly.max(axis=0)]), box)
 
 
 def test_order_points():
     pts = np.array([[5.0, 5.0], [1.0, 5.0], [1.0, 1.0], [5.0, 1.0]])
     ordered = order_points(pts)
     assert np.allclose(ordered, [[1, 1], [5, 1], [5, 5], [1, 5]])
-
-
-def test_convert_to_relative():
-    boxes = np.array([[64, 32, 128, 64]])
-    rel = convert_to_relative_coords(boxes, (128, 256))
-    assert np.allclose(rel, [[0.25, 0.25, 0.5, 0.5]])
 
 
 def test_rotate_boxes_noop_below_min_angle():
@@ -39,7 +32,8 @@ def test_rotate_boxes_90_square_page():
     boxes = np.array([[0.4, 0.4, 0.6, 0.6]])  # centered box: invariant at 90
     out = rotate_boxes(boxes, 90.0, (100, 100))
     assert out.shape == (1, 4, 2)
-    assert np.allclose(polygon_to_bbox(out[0]), [0.4, 0.4, 0.6, 0.6], atol=1e-9)
+    enclosing = np.concatenate([out[0].min(axis=0), out[0].max(axis=0)])
+    assert np.allclose(enclosing, [0.4, 0.4, 0.6, 0.6], atol=1e-9)
 
 
 def test_estimate_page_angle():
@@ -56,17 +50,3 @@ def test_box_iou_closed_form():
     assert np.allclose(iou, [[0.5 / 1.5, 0.0]])
     assert box_iou(np.zeros((0, 4)), b).shape == (0, 2)
 
-
-def test_nms_greedy_suppression():
-    from doctr_spark.kernels.geometry import nms
-
-    boxes = np.array([
-        [0.1, 0.1, 0.3, 0.3],
-        [0.12, 0.12, 0.32, 0.32],  # heavy overlap with 0, lower score
-        [0.6, 0.6, 0.8, 0.8],
-    ])
-    scores = np.array([0.9, 0.8, 0.7])
-    assert nms(boxes, scores, thresh=0.5) == [0, 2]
-    # raise threshold: nothing suppressed
-    assert nms(boxes, scores, thresh=0.95) == [0, 1, 2]
-    assert nms(np.zeros((0, 4)), np.zeros(0)) == []

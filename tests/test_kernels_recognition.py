@@ -2,7 +2,7 @@ import numpy as np
 import pytest
 
 from doctr_spark.config import GLYPH_H
-from doctr_spark.kernels.glyphs import draw_word, forward_logits, word_width
+from doctr_spark.kernels.glyphs import draw_word, word_width
 from doctr_spark.kernels.recognition import (
     ctc_best_path,
     merge_multi_strings,
@@ -124,23 +124,6 @@ def test_attention_decode_vitstr_style():
     assert word == "hi"  # cut at first <eos>; trailing steps ignored
     assert conf > 0.9
     assert attention_decode(np.zeros((0, len(vocab) + 1), dtype=np.float32)) == ("", 0.0)
-
-
-def test_encode_sequences_eos_sos_pad():
-    from doctr_spark.kernels.vocab import DEFAULT_VOCAB, encode_sequences
-
-    V = len(DEFAULT_VOCAB)
-    out = encode_sequences(["ab", "a"], eos=V)
-    assert out.shape == (2, 3)
-    assert out[1].tolist()[1:] == [V, V]  # eos-padded
-    out2 = encode_sequences(["ab", "a"], eos=V, pad=V + 1, sos=V + 2)
-    assert out2[0, 0] == V + 2  # sos first
-    assert out2[0, 1:4].tolist() == [
-        DEFAULT_VOCAB.index("a"), DEFAULT_VOCAB.index("b"), V]  # word then eos
-    assert out2[1, -1] == V + 1  # padding symbol
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
-        encode_sequences(["a"], eos=2)
 
 
 def test_batched_recognition_matches_per_crop():

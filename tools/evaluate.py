@@ -23,7 +23,7 @@ from __future__ import annotations
 import json
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F  # noqa: N812
 
 
@@ -32,7 +32,7 @@ def evaluate(spark: SparkSession, img_folder: str, label_file: str) -> dict:
 
     from doctr_spark.io.datasets import load_ocr_dataset
     from doctr_spark.operators.detect import detect_boxes
-    from doctr_spark.operators.metrics import localization_per_page
+    from doctr_spark.operators.metrics import localization_confusion, text_match
     from doctr_spark.operators.pipeline import extract_documents
 
     # the text-metrics join keys the label table's img_path (img_folder +
@@ -73,11 +73,6 @@ def evaluate(spark: SparkSession, img_folder: str, label_file: str) -> dict:
         "conv_id",
         F.regexp_replace("extracted_text", r"\s+", " ").alias("extracted_text"),
     )
-    text = gt.join(docs, "conv_id", "left").select(
-        "conv_id",
-        (F.col("extracted_text") == F.col("gt_text")).cast("int").alias("exact"),
-        (F.lower("extracted_text") == F.lower("gt_text")).cast("int").alias("caseless"),
-    )
 
     # detection rows carry relative boxes + page dims; GT geometry is absolute
     preds = (
@@ -100,25 +95,15 @@ def evaluate(spark: SparkSession, img_folder: str, label_file: str) -> dict:
         "gt_boxes",
         F.coalesce("pred_boxes", F.array().cast("array<array<double>>")).alias("pred_boxes"),
     )
-    loc: DataFrame = localization_per_page(pairs)
-
-    t = text.agg(
-        F.count("*").alias("n_images"),
-        F.avg("exact").alias("exact_rate"),
-        F.avg("caseless").alias("caseless_rate"),
-    ).first()
-    m = loc.agg(
-        (F.sum("n_matched") / F.sum("n_gt")).alias("recall"),
-        (F.sum("n_matched") / F.sum("n_pred")).alias("precision"),
-        (F.sum("sum_iou") / F.sum("n_matched")).alias("mean_iou"),
-    ).first()
+    t = text_match(gt.join(docs, "conv_id", "left"), pred="extracted_text", gt="gt_text").first()
+    m = localization_confusion(pairs).first()
     return {
-        "n_images": t["n_images"],
-        "exact_rate": round(float(t["exact_rate"]), 6),
-        "caseless_rate": round(float(t["caseless_rate"]), 6),
-        "recall": round(float(m["recall"]), 6),
-        "precision": round(float(m["precision"]), 6),
-        "mean_iou": round(float(m["mean_iou"]), 6),
+        "n_images": t["n"],
+        "exact_rate": t["raw"],
+        "caseless_rate": t["caseless"],
+        "recall": m["recall"],
+        "precision": m["precision"],
+        "mean_iou": m["mean_iou"],
     }
 
 
